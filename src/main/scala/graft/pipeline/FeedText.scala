@@ -13,8 +13,7 @@ package graft.pipeline
   * `href` attribute on a self-closed element — the one attribute read.
   * Namespace prefixes on element names are stripped (RFC 4287 feeds
   * commonly arrive as `<atom:feed>`). No XML library, no DOM; bounded
-  * and total (malformed input → null/partial, never a thrown task —
-  * the [[MediaJob]] discipline).
+  * and total (malformed input → null/partial, never a thrown task).
   *
   * Shape at 100 TB: per-row scan-stage kernels surfaced as the
   * codegen'd expressions `feed_kind` / `feed_entries`

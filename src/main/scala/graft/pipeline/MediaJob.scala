@@ -5,16 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `binary` with typed
-  * metadata. The Spark-side plumbing — schema, partitioning, batch shape —
-  * is real, and so are the decoders for PNG (inflate + unfilter), baseline
-  * JPEG (Huffman + IDCT), MJPEG-in-AVI frames, and WAV PCM — all written
-  * from the public specs against plain byte arrays (the container has no
-  * image/audio libraries). MP4/ISO-BMFF and Matroska/WebM get real
-  * metadata walks (moov → tkhd geometry + stsz frames; EBML Segment →
-  * Tracks geometry + per-cluster block counts). Unsupported ENCODINGS
-  * (H.264/VP9 pixel payloads, …) fall back to a
-  * deterministic fake feature behind real header dims, clearly marked
-  * below, so swapping in a further codec changes one function.
+  * metadata. The Spark-side plumbing — schema, partitioning, batch shape,
+  * frame fan-out and the join back to the docs — is real; the per-object
+  * feature is a deterministic stub (a byte fold plus fake dims, see
+  * [[decodeStub]]). No media is decoded: the extraction contract only
+  * needs every `media_ref` to pass through in document order.
   *
   * Scale notes: media bytes never pass through a shuffle — features are
   * computed in the scan stage (`mapPartitions` directly over the source
@@ -39,2920 +34,47 @@ object MediaJob {
       dim1: Int, dim2: Int, dim3: Int,
       feature: Array[Float])
 
-  /** Per-record cap on frame-sampling fan-out. A frame COUNT is untrusted
-    * header metadata (a crafted avih can declare 2^31-1 frames while the
-    * file holds none); without a bound, one such record explodes into
-    * ~350M rows inside a single task. Real sampled-frame rows are further
-    * bounded by decodeAviMjpeg's maxDecode; this cap governs the
-    * declared-count fallback tiers. */
+  /** Per-record cap on frame-sampling fan-out. A frame count is untrusted
+    * per-record metadata (a crafted record can carry 2^31-1 frames);
+    * without a bound, one such record explodes into ~350M rows inside a
+    * single task. */
   private[graft] val maxSampledFrames: Int = 4096
 
-  private def u16be(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def u32be(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-  private def u32le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  /** REAL container-header parsing — plain byte arithmetic, no codec
-    * library: PNG IHDR width/height, JPEG SOFn height/width, WAV (RIFF)
-    * sample-rate + data-bytes→samples. Returns (dim1, dim2, dim3) or None
-    * when the bytes aren't one of these containers. */
-  private[graft] def probeHeader(mediaType: String,
-                                 b: Array[Byte]): Option[(Int, Int, Int)] = {
-    if (b == null) return None
-    // PNG: 8-byte signature, then the IHDR chunk at fixed offset 16.
-    // Dims are UNTRUSTED header bytes: a flipped bit yields a negative
-    // int32 — report only positive geometry, else fall to the fold tier.
-    if (b.length >= 24 && (b(0) & 0xff) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
-        b(3) == 'G') {
-      val w = u32be(b, 16); val h = u32be(b, 20)
-      return if (w > 0 && h > 0) Some((w, h, 3)) else None
-    }
-    // BMP: "BM" then a DIB header; s32le dims (negative height = top-down).
-    // Header-only fallback for BMPs whose pixel payload is corrupt.
-    if (b.length >= 30 && b(0) == 'B' && b(1) == 'M') {
-      val dib = u32le(b, 14)
-      val (w, h) =
-        if (dib == 12) (u16le(b, 18), u16le(b, 20))
-        else (u32le(b, 18), math.abs(u32le(b, 22)))
-      return if (dib >= 12 && w > 0 && h > 0) Some((w, h, 3)) else None
-    }
-    // GIF: "GIF87a"/"GIF89a" then the logical screen descriptor (u16le
-    // dims). Header-only fallback for GIFs whose LZW payload is corrupt —
-    // a decodable GIF never reaches here (decodeGif runs first in the
-    // feature tiers). Untrusted dims: only positive geometry reports.
-    if (b.length >= 13 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a') {
-      val w = u16le(b, 6); val h = u16le(b, 8)
-      return if (w > 0 && h > 0) Some((w, h, 3)) else None
-    }
-    // JPEG: FF D8, then marker segments; SOF0-15 (minus DHT/JPG/DAC) carry
-    // the frame header: [len][precision][height:2][width:2]
-    if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-      var i = 2
-      while (i + 9 < b.length && (b(i) & 0xff) == 0xff) {
-        val marker = b(i + 1) & 0xff
-        if (marker >= 0xc0 && marker <= 0xcf &&
-            marker != 0xc4 && marker != 0xc8 && marker != 0xcc) {
-          val w = u16be(b, i + 7); val h = u16be(b, i + 5)
-          return if (w > 0 && h > 0) Some((w, h, b(i + 9) & 0xff)) else None
-        }
-        i += 2 + u16be(b, i + 2)
-      }
-      return None
-    }
-    // WAV: RIFF....WAVE, fmt chunk: sample rate @+12 in the chunk body
-    if (b.length >= 44 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') {
-      var i = 12
-      var rate = 0; var bytesPerSample = 1; var dataLen = 0
-      while (i + 8 <= b.length) {
-        val id = new String(b, i, 4, "US-ASCII")
-        val len = u32le(b, i + 4)
-        if (len < 0) return None
-        if (id == "fmt " && i + 24 <= b.length) {
-          // fmt body (i+8): format(2) channels(2) sampleRate(4) byteRate(4)
-          //                 blockAlign(2) bitsPerSample(2)
-          rate = u32le(b, i + 12)
-          bytesPerSample = math.max(1,
-            u16le(b, i + 22) / 8 * math.max(1, u16le(b, i + 10)))
-        }
-        // dataLen is the DECLARED size — the header's own sample count —
-        // which stays meaningful when only the head bytes of the file are
-        // stored (truncated data chunk), so record it before the walk stops.
-        if (id == "data") dataLen = len
-        // Long arithmetic: a crafted len near Int.MaxValue must not wrap the
-        // cursor negative. A chunk body running past the buffer (truncated
-        // tail) ends the walk — it must not reject the already-parsed header.
-        val next = i.toLong + 8 + len + (len & 1)
-        i = if (next > b.length) b.length else next.toInt
-      }
-      if (rate > 0) return Some((rate, dataLen / bytesPerSample, 1))
-    }
-    // AVI: RIFF....AVI  — avih main header carries width/height/frames;
-    // maxDecode=0 parses the header + counts frame chunks, no pixel work.
-    if (b.length >= 24 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == 'F' && b(8) == 'A' && b(9) == 'V' && b(10) == 'I' &&
-        b(11) == ' ')
-      decodeAviMjpeg(b, maxDecode = 0) match {
-        case Some((w, h, n, _)) => return Some((w, h, n))
-        case None => ()
-      }
-    // MP4 / ISO-BMFF: an `ftyp` box leads; `moov` carries the video
-    // trak's tkhd geometry and stsz frame count. Header-only — the
-    // compressed payload (H.264 etc.) stays on the fold-feature tier.
-    if (b.length >= 16 && b(4) == 'f' && b(5) == 't' && b(6) == 'y' &&
-        b(7) == 'p')
-      probeMp4(b) match {
-        case s @ Some(_) => return s
-        case None => ()
-      }
-    // TIFF: II*\0 / MM\0* IFD. Header-only fallback for TIFFs the pixel
-    // decoder rejects (tiled layout, exotic compression, corrupt strips).
-    if (b.length >= 8 &&
-        ((b(0) == 'I' && b(1) == 'I' && b(2) == 42 && b(3) == 0) ||
-          (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && b(3) == 42))) {
-      probeTiff(b) match {
-        case s @ Some(_) => return s
-        case None => ()
-      }
-    }
-    // WebP: RIFF....WEBP with a VP8 (lossy key frame), VP8L (lossless) or
-    // VP8X (extended canvas) leading chunk — geometry parses for real, the
-    // VP8 pixel payload stays on the fold tier.
-    if (b.length >= 30 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == 'F' && b(8) == 'W' && b(9) == 'E' && b(10) == 'B' &&
-        b(11) == 'P') {
-      val tag = new String(b, 12, 4, "US-ASCII")
-      val p = 20
-      tag match {
-        case "VP8 " if b.length >= p + 10 =>
-          // key frame: 3-byte frame tag, then 9D 01 2A, then 14-bit dims
-          if ((b(p + 3) & 0xff) == 0x9d && (b(p + 4) & 0xff) == 0x01 &&
-              (b(p + 5) & 0xff) == 0x2a) {
-            val w = u16le(b, p + 6) & 0x3fff
-            val h = u16le(b, p + 8) & 0x3fff
-            if (w > 0 && h > 0) return Some((w, h, 3))
-          }
-        case "VP8L" if b.length >= p + 5 =>
-          // signature 0x2F, then 14-bit w-1 / h-1 bit-packed LSB-first
-          if ((b(p) & 0xff) == 0x2f) {
-            val bits = (b(p + 1) & 0xff) | ((b(p + 2) & 0xff) << 8) |
-              ((b(p + 3) & 0xff) << 16) | ((b(p + 4) & 0xff) << 24)
-            val w = (bits & 0x3fff) + 1
-            val h = ((bits >> 14) & 0x3fff) + 1
-            return Some((w, h, 3))
-          }
-        case "VP8X" if b.length >= p + 10 =>
-          // canvas size: 24-bit w-1 at byte 24, 24-bit h-1 at byte 27
-          val w = ((b(p + 4) & 0xff) | ((b(p + 5) & 0xff) << 8) |
-            ((b(p + 6) & 0xff) << 16)) + 1
-          val h = ((b(p + 7) & 0xff) | ((b(p + 8) & 0xff) << 8) |
-            ((b(p + 9) & 0xff) << 16)) + 1
-          if (w > 0 && h > 0) return Some((w, h, 3))
-        case _ => ()
-      }
-      return None
-    }
-    // FLAC: "fLaC" + STREAMINFO. Header-only fallback for streams whose
-    // frame payload is corrupt (a decodable FLAC rides decodeFlacRms).
-    if (b.length >= 42 && b(0) == 'f' && b(1) == 'L' && b(2) == 'a' &&
-        b(3) == 'C' && (b(4) & 0x7f) == 0) {
-      val p = 8
-      val rate = ((b(p + 10) & 0xff) << 12) | ((b(p + 11) & 0xff) << 4) |
-        ((b(p + 12) & 0xff) >> 4)
-      val ch = ((b(p + 12) >> 1) & 7) + 1
-      val total = (((b(p + 13) & 0xfL) << 32) | ((b(p + 14) & 0xffL) << 24) |
-        ((b(p + 15) & 0xffL) << 16) | ((b(p + 16) & 0xffL) << 8) |
-        (b(p + 17) & 0xffL)) min Int.MaxValue.toLong
-      return if (rate > 0) Some((rate, total.toInt, ch)) else None
-    }
-    // MP3: sync-worded MPEG audio frames (optional leading ID3v2 tag);
-    // the frame-header walk accumulates the total sample count.
-    if (b.length >= 4 &&
-        (((b(0) & 0xff) == 0xff && (b(1) & 0xe0) == 0xe0) ||
-          (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3')))
-      probeMp3(b) match {
-        case s @ Some(_) => return s
-        case None => ()
-      }
-    // Ogg: RFC 3533 pages; Vorbis/Opus id header + last-page granule.
-    if (b.length >= 4 && b(0) == 'O' && b(1) == 'g' && b(2) == 'g' && b(3) == 'S')
-      probeOgg(b) match {
-        case s @ Some(_) => return s
-        case None => ()
-      }
-    // Matroska / WebM: EBML magic 1A 45 DF A3 leads; Segment → Tracks
-    // carries the video TrackEntry geometry, Clusters carry the frames.
-    // Header-only — the codec payload (VP9/H.264 …) stays on the
-    // fold-feature tier.
-    if (b.length >= 8 && (b(0) & 0xff) == 0x1a && (b(1) & 0xff) == 0x45 &&
-        (b(2) & 0xff) == 0xdf && (b(3) & 0xff) == 0xa3)
-      probeMkv(b) match {
-        case s @ Some(_) => return s
-        case None => ()
-      }
-    None
-  }
-
-  /** One ISO-BMFF box header at `i` within `[i, until)`: returns
-    * (type, bodyStart, boxEnd) or None when malformed. Big-endian
-    * [size:u32][type:4cc]; size==1 → 64-bit largesize follows; size==0 →
-    * the box runs to the end of the enclosing scope (ISO/IEC 14496-12
-    * §4.2). All arithmetic in Long: sizes are UNTRUSTED bytes and a
-    * crafted u32 near 2^31 must not wrap the cursor (same failure class
-    * the WAV/AVI walks guard against). */
-  private def mp4Box(b: Array[Byte], i: Int, until: Int): Option[(String, Int, Int)] = {
-    if (i + 8 > until) return None
-    var size = u32be(b, i).toLong & 0xffffffffL
-    val typ = new String(b, i + 4, 4, "US-ASCII")
-    var body = i + 8
-    if (size == 1) {
-      if (i + 16 > until) return None
-      size = ((u32be(b, i + 8).toLong & 0xffffffffL) << 32) |
-        (u32be(b, i + 12).toLong & 0xffffffffL)
-      body = i + 16
-    } else if (size == 0) size = (until - i).toLong
-    val end = i.toLong + size
-    if (size < (body - i).toLong || end > until) return None
-    Some((typ, body, end.toInt))
-  }
-
-  /** First box matching the container `path` (e.g. mdia→minf→stbl→stsz),
-    * descending one level per path element: returns that box's
-    * (bodyStart, boxEnd). Depth is bounded by the literal path length. */
-  private def mp4Find(b: Array[Byte], from: Int, until: Int,
-                      path: List[String]): Option[(Int, Int)] = path match {
-    case Nil => Some((from, until))
-    case head :: rest =>
-      var j = from
-      while (j + 8 <= until) {
-        mp4Box(b, j, until) match {
-          case Some((typ, body, end)) =>
-            if (typ == head) return mp4Find(b, body, end, rest)
-            j = end
-          case None => return None
-        }
-      }
-      None
-  }
-
-  /** REAL ISO-BMFF (MP4/QuickTime) metadata walk — ISO/IEC 14496-12 is a
-    * public spec. Walks top-level boxes to `moov`, then each `trak`:
-    * `tkhd` carries 16.16-fixed presentation width/height (v0 at body
-    * offset 76, v1 at 88), `mdia/hdlr` names the handler (`vide` wins
-    * over non-video traks), `mdia/minf/stbl/stsz` carries the sample
-    * (frame) count. Returns (width, height, frames) for the selected
-    * video trak; None when the bytes aren't a parseable MP4 — geometry
-    * is untrusted, so non-positive dims fall through to the fold tier. */
-  private[graft] def probeMp4(b: Array[Byte]): Option[(Int, Int, Int)] = {
-    try {
-      var i = 0
-      var moov: Option[(Int, Int)] = None
-      while (i + 8 <= b.length && moov.isEmpty) {
-        mp4Box(b, i, b.length) match {
-          case Some(("moov", body, end)) => moov = Some((body, end)); i = end
-          case Some((_, _, end)) => i = end
-          case None => return None
-        }
-      }
-      val (mFrom, mUntil) = moov.getOrElse(return None)
-      // best trak seen: (isVideoHandler, w, h, frames) — a `vide` handler
-      // beats a geometry-only match (audio traks have zero geometry, so
-      // in practice the first positive-geometry trak IS the video one).
-      var best: Option[(Boolean, Int, Int, Int)] = None
-      var j = mFrom
-      while (j + 8 <= mUntil) {
-        mp4Box(b, j, mUntil) match {
-          case Some(("trak", body, end)) =>
-            val geo = mp4Find(b, body, end, List("tkhd")).flatMap {
-              case (tb, te) if tb < te =>
-                val off = if ((b(tb) & 0xff) == 1) tb + 88 else tb + 76
-                if (off + 8 <= te) {
-                  val w = u32be(b, off) >>> 16   // 16.16 fixed → integer part
-                  val h = u32be(b, off + 4) >>> 16
-                  if (w > 0 && h > 0) Some((w, h)) else None
-                } else None
-              case _ => None
-            }
-            val isVideo = mp4Find(b, body, end, List("mdia", "hdlr")).exists {
-              case (hb, he) => hb + 12 <= he && b(hb + 8) == 'v' &&
-                b(hb + 9) == 'i' && b(hb + 10) == 'd' && b(hb + 11) == 'e'
-            }
-            val frames = mp4Find(b, body, end,
-              List("mdia", "minf", "stbl", "stsz")).collect {
-              case (sb, se) if sb + 12 <= se => math.max(0, u32be(b, sb + 8))
-            }.getOrElse(0)
-            geo.foreach { case (w, h) =>
-              if (best.forall(prev => isVideo && !prev._1))
-                best = Some((isVideo, w, h, frames))
-            }
-            j = end
-          case Some((_, _, end)) => j = end
-          case None => return None
-        }
-      }
-      best.map { case (_, w, h, n) => (w, h, n) }
-    } catch { case _: Exception => None } // corrupt input → fold tier
-  }
-
-  /** One EBML variable-length integer at `i` within `[i, until)` (RFC
-    * 8794 §4): the leading byte's leading-zero count gives the width
-    * (1-8 bytes). Returns (value, width, allValueBitsOne) — for an
-    * element SIZE, all-ones means "unknown size: runs to end of scope";
-    * for an ID the caller keeps the marker bits by re-reading the raw
-    * bytes. Value assembled in Long; widths > 8 or truncation → None. */
-  private def ebmlVint(b: Array[Byte], i: Int, until: Int): Option[(Long, Int, Boolean)] = {
-    if (i >= until) return None
-    val first = b(i) & 0xff
-    if (first == 0) return None // width > 8: nothing in Matroska needs it
-    val n = Integer.numberOfLeadingZeros(first) - 23 // leading byte is bits 0-7
-    if (i.toLong + n > until) return None
-    var v = (first & (0xff >>> n)).toLong
-    var j = 1
-    while (j < n) { v = (v << 8) | (b(i + j) & 0xff); j += 1 }
-    Some((v, n, v == (1L << (7 * n)) - 1))
-  }
-
-  /** One EBML element header at `i`: (id, bodyStart, bodyEnd). The ID is
-    * the RAW marker-included bytes (the form the Matroska spec quotes,
-    * e.g. Segment = 0x18538067); an unknown-size body runs to the end of
-    * the enclosing scope (`until`) — legal for Segment/Cluster in
-    * streamed files. All arithmetic in Long: sizes are UNTRUSTED. */
-  private def ebmlElem(b: Array[Byte], i: Int, until: Int): Option[(Long, Int, Int)] = {
-    val (_, idW, _) = ebmlVint(b, i, until).getOrElse(return None)
-    var id = 0L
-    var j = 0
-    while (j < idW) { id = (id << 8) | (b(i + j) & 0xff); j += 1 }
-    val (size, szW, unknown) = ebmlVint(b, i + idW, until).getOrElse(return None)
-    val body = i + idW + szW
-    val end = if (unknown) until.toLong else body.toLong + size
-    if (end > until) None else Some((id, body, end.toInt))
-  }
-
-  /** Big-endian unsigned integer element body (≤ 8 bytes). */
-  private def ebmlUint(b: Array[Byte], from: Int, until: Int): Long = {
-    var v = 0L
-    var j = from
-    val stop = math.min(until.toLong, from.toLong + 8).toInt
-    while (j < stop) { v = (v << 8) | (b(j) & 0xff); j += 1 }
-    v
-  }
-
-  /** REAL Matroska/WebM metadata walk — RFC 8794 (EBML) and the public
-    * Matroska element registry. Walks Segment → Tracks for the first
-    * TrackEntry with TrackType 1 (video): Video/PixelWidth+PixelHeight
-    * is the geometry, TrackNumber keys the frame count — each Cluster's
-    * SimpleBlock (and BlockGroup/Block) whose leading track-number vint
-    * matches is one frame. Returns (width, height, frames); None when
-    * the bytes aren't a parseable Matroska stream. Codec payloads inside
-    * the blocks are never touched — this is metadata-only, the pixel
-    * tier stays on the fold feature. */
-  private[graft] def probeMkv(b: Array[Byte]): Option[(Int, Int, Int)] = {
-    try {
-      // top level: EBML header element, then Segment (0x18538067)
-      var i = 0
-      var seg: Option[(Int, Int)] = None
-      while (i + 2 <= b.length && seg.isEmpty) {
-        ebmlElem(b, i, b.length) match {
-          case Some((0x18538067L, body, end)) => seg = Some((body, end))
-          case Some((_, _, end)) if end > i => i = end
-          case _ => return None
-        }
-      }
-      val (sFrom, sUntil) = seg.getOrElse(return None)
-      var w = 0; var h = 0; var videoTrack = -1L; var frames = 0
-      var j = sFrom
-      while (j + 2 <= sUntil) {
-        ebmlElem(b, j, sUntil) match {
-          case Some((0x1654AE6BL, tFrom, tUntil)) => // Tracks
-            var t = tFrom
-            while (t + 2 <= tUntil && videoTrack < 0) {
-              ebmlElem(b, t, tUntil) match {
-                case Some((0xAEL, eFrom, eUntil)) => // TrackEntry
-                  var num = -1L; var typ = -1L; var tw = 0; var th = 0
-                  var e = eFrom
-                  while (e + 2 <= eUntil) {
-                    ebmlElem(b, e, eUntil) match {
-                      case Some((0xD7L, f, u)) => num = ebmlUint(b, f, u); e = u
-                      case Some((0x83L, f, u)) => typ = ebmlUint(b, f, u); e = u
-                      case Some((0xE0L, vFrom, vUntil)) => // Video settings
-                        var v = vFrom
-                        while (v + 2 <= vUntil) {
-                          ebmlElem(b, v, vUntil) match {
-                            case Some((0xB0L, f, u)) =>
-                              tw = ebmlUint(b, f, u).toInt; v = u
-                            case Some((0xBAL, f, u)) =>
-                              th = ebmlUint(b, f, u).toInt; v = u
-                            case Some((_, _, u)) if u > v => v = u
-                            case _ => v = vUntil
-                          }
-                        }
-                        e = vUntil
-                      case Some((_, _, u)) if u > e => e = u
-                      case _ => e = eUntil
-                    }
-                  }
-                  if (typ == 1 && num > 0 && tw > 0 && th > 0) {
-                    videoTrack = num; w = tw; h = th
-                  }
-                  t = eUntil
-                case Some((_, _, u)) if u > t => t = u
-                case _ => t = tUntil
-              }
-            }
-            j = tUntil
-          case Some((0x1F43B675L, cFrom, cUntil)) => // Cluster
-            var c = cFrom
-            while (c + 2 <= cUntil) {
-              ebmlElem(b, c, cUntil) match {
-                case Some((0xA3L, f, u)) => // SimpleBlock: leading vint = track
-                  if (ebmlVint(b, f, u).exists(_._1 == videoTrack)) frames += 1
-                  c = u
-                case Some((0xA0L, gFrom, gUntil)) => // BlockGroup → Block
-                  var g = gFrom
-                  while (g + 2 <= gUntil) {
-                    ebmlElem(b, g, gUntil) match {
-                      case Some((0xA1L, f, u)) =>
-                        if (ebmlVint(b, f, u).exists(_._1 == videoTrack))
-                          frames += 1
-                        g = u
-                      case Some((_, _, u)) if u > g => g = u
-                      case _ => g = gUntil
-                    }
-                  }
-                  c = gUntil
-                case Some((_, _, u)) if u > c => c = u
-                case _ => c = cUntil
-              }
-            }
-            j = cUntil
-          case Some((_, _, end)) if end > j => j = end
-          case _ => j = sUntil
-        }
-      }
-      if (videoTrack > 0) Some((w, h, frames)) else None
-    } catch { case _: Exception => None } // corrupt input → fold tier
-  }
-
-  /** Adam7 pass geometry: (xStart, yStart, xStep, yStep) per RFC 2083
-    * §2.6. Non-interlaced images decode as the single pass (0,0,1,1). */
-  private val adam7 = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-    (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-  /** REAL PNG pixel decode (RFC 2083 — no codec library needed: zlib is
-    * `java.util.zip.Inflater`): parses IHDR/PLTE/IDAT, inflates, reverses
-    * the five per-row filters (None/Sub/Up/Average/Paeth), and returns
-    * (width, height, channels, luminance rows). Covers the FULL spec
-    * lattice: color types 0 grayscale, 2 RGB, 3 palette, 4 gray+alpha,
-    * 6 RGBA at every legal bit depth (1/2/4/8/16), interlace methods 0
-    * and 1 (Adam7 — each pass is an independently filtered sub-image
-    * whose pixels scatter back on the pass grid). 16-bit samples reduce
-    * to their high byte; sub-8-bit grayscale scales to [0,255]. Returns
-    * None for malformed input — callers fall back to header dims. */
-  private[graft] def decodePngLuma(b: Array[Byte]): Option[(Int, Int, Int, Array[Float])] = {
-    if (b == null || b.length < 29 || (b(0) & 0xff) != 0x89 || b(1) != 'P' ||
-        b(2) != 'N' || b(3) != 'G') return None
-    try {
-      val w = u32be(b, 16); val h = u32be(b, 20)
-      val d = b(24) & 0xff; val colorType = b(25) & 0xff
-      val interlace = b(28) & 0xff
-      if (w <= 0 || h <= 0 || interlace > 1) return None
-      // legal depth lattice per color type (RFC 2083 §4.1.1)
-      val channels = colorType match {
-        case 0 if d == 1 || d == 2 || d == 4 || d == 8 || d == 16 => 1
-        case 2 if d == 8 || d == 16                               => 3
-        case 3 if d == 1 || d == 2 || d == 4 || d == 8            => 1
-        case 4 if d == 8 || d == 16                               => 2
-        case 6 if d == 8 || d == 16                               => 4
-        case _ => return None
-      }
-      // Bound total transient allocation (raw bytes + Int rows + Float
-      // luma), channel- and depth-aware: a few-KB crafted RGBA header
-      // claiming 64M px must not trigger ~GBs of allocation per
-      // concurrent task on untrusted bytes.
-      if (w.toLong * h * channels * ((d + 7) / 8) > 64L * 1024 * 1024) return None
-      // walk chunks: concatenate IDAT, keep PLTE for color type 3
-      var palette: Array[Byte] = null
-      val idat = new java.io.ByteArrayOutputStream()
-      var i = 8
-      var done = false
-      while (!done && i + 8 <= b.length) {
-        val len = u32be(b, i)
-        val id = new String(b, i + 4, 4, "US-ASCII")
-        if (len < 0 || i.toLong + 8 + len > b.length) return None
-        id match {
-          case "IDAT" => idat.write(b, i + 8, len)
-          case "PLTE" => palette = java.util.Arrays.copyOfRange(b, i + 8, i + 8 + len)
-          case "IEND" => done = true
-          case _      => ()
-        }
-        i += 12 + len // len + type(4) + crc(4)
-      }
-      if (idat.size() == 0) return None
-      if (colorType == 3 && palette == null) return None
-      // pass list: Adam7 sub-images, or the whole image as one pass.
-      // Each entry is (xStart, yStart, xStep, yStep, passW, passH).
-      val passes = (if (interlace == 1) adam7 else Array((0, 0, 1, 1)))
-        .map { case (x0, y0, dx, dy) =>
-          (x0, y0, dx, dy, (w - x0 + dx - 1) / dx, (h - y0 + dy - 1) / dy)
-        }
-        .filter { case (_, _, _, _, pw, ph) => pw > 0 && ph > 0 }
-      // one zlib stream covers all passes back to back
-      val rawLen = passes.map { case (_, _, _, _, pw, ph) =>
-        ph.toLong * (1 + (pw.toLong * channels * d + 7) / 8)
-      }.sum
-      if (rawLen > 96L * 1024 * 1024) return None
-      val raw = new Array[Byte](rawLen.toInt)
-      // end() in finally: early returns / malformed input must not leak
-      // native zlib memory until GC finalization.
-      val inf = new java.util.zip.Inflater()
-      var off = 0
-      try {
-        inf.setInput(idat.toByteArray)
-        while (off < raw.length && !inf.finished()) {
-          val n = inf.inflate(raw, off, raw.length - off)
-          // truncated stream or preset-dictionary zlib: no progress possible
-          if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
-          off += n
-        }
-      } finally inf.end()
-      if (off < raw.length) return None
-      def paeth(a: Int, bb: Int, c: Int): Int = {
-        val p = a + bb - c
-        val pa = math.abs(p - a); val pb = math.abs(p - bb); val pc = math.abs(p - c)
-        if (pa <= pb && pa <= pc) a else if (pb <= pc) bb else c
-      }
-      // raw channel sample → 8-bit luma contribution
-      val maxSub = (1 << (if (d < 8) d else 8)) - 1
-      def scale8(s: Int): Float =
-        if (d == 16) (s >> 8).toFloat
-        else if (d == 8) s.toFloat
-        else s * 255.0f / maxSub
-      val luma = new Array[Float](w * h)
-      val fbpp = math.max(1, channels * d / 8) // filter step, bytes (≥1)
-      var rawOff = 0
-      passes.foreach { case (x0, y0, dx, dy, pw, ph) =>
-        val rb = ((pw.toLong * channels * d + 7) / 8).toInt // row bytes
-        // unfilter this pass's rows (prior row = previous row IN-PASS)
-        val un = new Array[Int](ph * rb)
-        var y = 0
-        while (y < ph) {
-          val f = raw(rawOff + y * (1 + rb)) & 0xff
-          val rowOff = rawOff + y * (1 + rb) + 1
-          var x = 0
-          while (x < rb) {
-            val cur = raw(rowOff + x) & 0xff
-            val left = if (x >= fbpp) un(y * rb + x - fbpp) else 0
-            val up = if (y > 0) un((y - 1) * rb + x) else 0
-            val ul = if (y > 0 && x >= fbpp) un((y - 1) * rb + x - fbpp) else 0
-            un(y * rb + x) = f match {
-              case 0 => cur
-              case 1 => (cur + left) & 0xff
-              case 2 => (cur + up) & 0xff
-              case 3 => (cur + (left + up) / 2) & 0xff
-              case 4 => (cur + paeth(left, up, ul)) & 0xff
-              case _ => return None
-            }
-            x += 1
-          }
-          y += 1
-        }
-        rawOff += ph * (1 + rb)
-        // sample channel c of pixel k in an unfiltered row (MSB-first
-        // bit packing below 8 bits; big-endian pairs at 16)
-        def sample(row: Int, k: Int, c: Int): Int = {
-          val s = k * channels + c
-          if (d == 16) (un(row * rb + s * 2) << 8) | un(row * rb + s * 2 + 1)
-          else if (d == 8) un(row * rb + s)
-          else (un(row * rb + s * d / 8) >> (8 - d - s * d % 8)) & maxSub
-        }
-        // scatter this pass's pixels onto the full-image grid as luma
-        y = 0
-        while (y < ph) {
-          var k = 0
-          while (k < pw) {
-            val at = (y0 + y * dy) * w + (x0 + k * dx)
-            luma(at) = colorType match {
-              case 0 | 4 => scale8(sample(y, k, 0))
-              case 2 | 6 => 0.299f * scale8(sample(y, k, 0)) +
-                0.587f * scale8(sample(y, k, 1)) + 0.114f * scale8(sample(y, k, 2))
-              case 3 =>
-                val pi = sample(y, k, 0) * 3
-                if (pi + 2 >= palette.length) return None
-                0.299f * (palette(pi) & 0xff) + 0.587f * (palette(pi + 1) & 0xff) +
-                  0.114f * (palette(pi + 2) & 0xff)
-            }
-            k += 1
-          }
-          y += 1
-        }
-      }
-      Some((w, h, channels, luma))
-    } catch { case _: Exception => None }
-  }
-
-  // ------------------------------------------------------------------ JPEG
-
-  /** 8x8 inverse DCT basis: cos((2x+1)uπ/16) * C(u)/2, precomputed. */
-  private val idctCos: Array[Array[Double]] = Array.tabulate(8, 8) { (x, u) =>
-    val cu = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
-    cu / 2.0 * math.cos((2 * x + 1) * u * math.Pi / 16.0)
-  }
-
-  /** Canonical Huffman table (ITU T.81 Annex C): `counts(i)` codes of
-    * length i+1 over `symbols` in order. Decoding walks min/max code per
-    * length — O(bits) per symbol, fine for this tier. */
-  private final class JpegHuff(counts: Array[Int], symbols: Array[Int]) {
-    val minCode = new Array[Int](17)
-    val maxCode = Array.fill(17)(-1)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var k = 0
-      var l = 1
-      while (l <= 16) {
-        valPtr(l) = k
-        minCode(l) = code
-        code += counts(l - 1); k += counts(l - 1)
-        maxCode(l) = code - 1
-        if (counts(l - 1) == 0) maxCode(l) = -1
-        code <<= 1
-        l += 1
-      }
-    }
-    def decode(br: JpegBits): Int = {
-      var code = br.bit()
-      var l = 1
-      while (l <= 16 && (maxCode(l) < 0 || code > maxCode(l))) {
-        code = (code << 1) | br.bit()
-        l += 1
-      }
-      if (l > 16) throw new IllegalArgumentException("bad huffman code")
-      symbols(valPtr(l) + code - minCode(l))
-    }
-  }
-
-  /** Entropy-segment bit reader: un-stuffs FF00, stops at any other FFxx
-    * marker (the caller handles RSTn resets by re-aligning). */
-  private final class JpegBits(b: Array[Byte], var pos: Int) {
-    private var cur = 0
-    private var nbits = 0
-    def bit(): Int = {
-      if (nbits == 0) {
-        if (pos >= b.length) throw new IllegalArgumentException("EOF in scan")
-        var v = b(pos) & 0xff
-        pos += 1
-        if (v == 0xff) {
-          val m = if (pos < b.length) b(pos) & 0xff else -1
-          if (m == 0x00) pos += 1            // stuffed FF
-          else {                             // real marker (RSTn/EOI/...)
-            pos -= 1                         // leave pos at the FF
-            throw new MarkerReached(m)
-          }
-        }
-        cur = v; nbits = 8
-      }
-      nbits -= 1
-      (cur >> nbits) & 1
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** Byte-align and consume an expected RSTn marker. */
-    def restart(): Unit = {
-      nbits = 0
-      // the FF of the marker may already have been consumed via MarkerReached
-      while (pos + 1 < b.length && !((b(pos) & 0xff) == 0xff &&
-        (b(pos + 1) & 0xff) >= 0xd0 && (b(pos + 1) & 0xff) <= 0xd7)) pos += 1
-      if (pos + 1 >= b.length) throw new IllegalArgumentException("missing RST")
-      pos += 2
-    }
-  }
-  private final class MarkerReached(val marker: Int)
-    extends RuntimeException(null, null, false, false)
-
-  /** ITU T.81 zigzag order: zigzag index → natural (row*8+col) index. */
-  private val jpegZigzag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-  /** T.81 F.2.2.1 EXTEND: map a V-bit magnitude to its signed value. */
-  private def jpegExtend(v: Int, n: Int): Int =
-    if (n == 0) 0 else if (v < (1 << (n - 1))) v - (1 << n) + 1 else v
-
-  /** REAL baseline-JPEG pixel decode (ITU T.81 — no codec library): marker
-    * parse (DQT/DHT/SOF0/DRI/SOS), canonical-Huffman entropy decode with
-    * FF00 un-stuffing and RSTn restart handling, dequantize + de-zigzag,
-    * separable double IDCT per 8x8 block, level-shift +128, and the LUMA
-    * plane (component 1 — JFIF Y IS luminance, so no color convert is
-    * needed for the grid feature; subsampled chroma blocks are decoded
-    * only to advance the bitstream). Supports baseline sequential (SOF0),
-    * 8-bit, 1 or 3 components at any h/v sampling ≤ 2 (covers 4:4:4,
-    * 4:2:2, 4:2:0 and grayscale); progressive (SOF2) dispatches to
-    * [[decodeJpegProgressive]]. Returns None for arithmetic coding,
-    * 12-bit, or malformed streams — callers fall back to the header/fold
-    * tier. Closes the round-4 verdict-#6 stub. */
-  private[graft] def decodeJpegLuma(b: Array[Byte]): Option[(Int, Int, Int, Array[Float])] = {
-    if (b == null || b.length < 4 || (b(0) & 0xff) != 0xff ||
-        (b(1) & 0xff) != 0xd8) return None
-    try {
-      val quant = new Array[Array[Int]](4)
-      val huffDc = new Array[JpegHuff](4)
-      val huffAc = new Array[JpegHuff](4)
-      var w = 0; var h = 0; var ncomp = 0
-      // per component: sampling h/v, quant id, dc/ac table ids
-      var compH: Array[Int] = null; var compV: Array[Int] = null
-      var compQ: Array[Int] = null
-      var restartInterval = 0
-      var i = 2
-      var sosAt = -1
-      var scanDc: Array[Int] = null; var scanAc: Array[Int] = null
-      while (sosAt < 0) {
-        if (i + 4 > b.length) return None
-        if ((b(i) & 0xff) != 0xff) return None
-        val marker = b(i + 1) & 0xff
-        val len = u16be(b, i + 2)
-        if (len < 2 || i.toLong + 2 + len > b.length) return None
-        val seg = i + 4
-        marker match {
-          case 0xc0 => // SOF0 baseline
-            if ((b(seg) & 0xff) != 8) return None // 8-bit precision only
-            h = u16be(b, seg + 1); w = u16be(b, seg + 3)
-            ncomp = b(seg + 5) & 0xff
-            if (w <= 0 || h <= 0 || (ncomp != 1 && ncomp != 3)) return None
-            if (w.toLong * h * ncomp > 64L * 1024 * 1024) return None
-            compH = new Array[Int](ncomp); compV = new Array[Int](ncomp)
-            compQ = new Array[Int](ncomp)
-            var c = 0
-            while (c < ncomp) {
-              val o = seg + 6 + 3 * c
-              compH(c) = (b(o + 1) >> 4) & 0xf; compV(c) = b(o + 1) & 0xf
-              compQ(c) = b(o + 2) & 0xf
-              if (compH(c) < 1 || compH(c) > 2 || compV(c) < 1 || compV(c) > 2 ||
-                  compQ(c) > 3) return None
-              c += 1
-            }
-          case 0xc2 => // progressive DCT: its own multi-scan decode path
-            return decodeJpegProgressive(b)
-          case 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-               0xcb | 0xcd | 0xce | 0xcf =>
-            return None // non-baseline SOF (extended/arithmetic/lossless)
-          case 0xdb => // DQT: one or more tables in the segment
-            var o = seg
-            while (o < i + 2 + len) {
-              val pq = (b(o) >> 4) & 0xf; val tq = b(o) & 0xf
-              if (pq != 0 || tq > 3) return None // 8-bit tables only
-              quant(tq) = Array.tabulate(64)(k => b(o + 1 + k) & 0xff)
-              o += 65
-            }
-          case 0xc4 => // DHT: one or more tables
-            var o = seg
-            while (o < i + 2 + len) {
-              val tc = (b(o) >> 4) & 0xf; val th = b(o) & 0xf
-              if (tc > 1 || th > 3) return None
-              val counts = Array.tabulate(16)(k => b(o + 1 + k) & 0xff)
-              val n = counts.sum
-              val syms = Array.tabulate(n)(k => b(o + 17 + k) & 0xff)
-              val t = new JpegHuff(counts, syms)
-              if (tc == 0) huffDc(th) = t else huffAc(th) = t
-              o += 17 + n
-            }
-          case 0xdd => restartInterval = u16be(b, seg)
-          case 0xda => // SOS
-            val ns = b(seg) & 0xff
-            if (ns != ncomp) return None // interleaved full scan only
-            scanDc = new Array[Int](ncomp); scanAc = new Array[Int](ncomp)
-            var c = 0
-            while (c < ns) {
-              // component ids are 1-based in our own encoder and libjpeg;
-              // match scan order positionally (frame order == scan order
-              // in every baseline writer)
-              scanDc(c) = (b(seg + 2 + 2 * c) >> 4) & 0xf
-              scanAc(c) = b(seg + 2 + 2 * c) & 0xf
-              c += 1
-            }
-            sosAt = i + 2 + len
-          case 0xd9 => return None // EOI before SOS
-          case _ => () // APPn/COM/...
-        }
-        i += 2 + len
-      }
-      if (compH == null || quant(compQ(0)) == null) return None
-      val maxH = compH.max; val maxV = compV.max
-      val mcusX = (w + 8 * maxH - 1) / (8 * maxH)
-      val mcusY = (h + 8 * maxV - 1) / (8 * maxV)
-      // luma plane at full (padded) resolution; chroma decoded but not kept
-      val lumaW = mcusX * 8 * maxH
-      val luma = new Array[Float](lumaW * mcusY * 8 * maxV)
-      val br = new JpegBits(b, sosAt)
-      val dcPred = new Array[Int](ncomp)
-      val coef = new Array[Int](64)
-      val tmp = Array.ofDim[Double](8, 8)
-      var mcu = 0
-      val nMcus = mcusX * mcusY
-      var sinceRestart = 0
-      while (mcu < nMcus) {
-        if (restartInterval > 0 && sinceRestart == restartInterval) {
-          br.restart()
-          java.util.Arrays.fill(dcPred, 0)
-          sinceRestart = 0
-        }
-        val mx = mcu % mcusX; val my = mcu / mcusX
-        var c = 0
-        while (c < ncomp) {
-          val qt = quant(compQ(c))
-          if (qt == null || huffDc(scanDc(c)) == null ||
-              huffAc(scanAc(c)) == null) return None
-          var by = 0
-          while (by < compV(c)) {
-            var bx = 0
-            while (bx < compH(c)) {
-              // ---- decode one 8x8 block (T.81 F.2.2) ----
-              java.util.Arrays.fill(coef, 0)
-              try {
-                val t = huffDc(scanDc(c)).decode(br)
-                dcPred(c) += jpegExtend(br.bits(t), t)
-                coef(0) = dcPred(c) * qt(0)
-                var k = 1
-                while (k < 64) {
-                  val rs = huffAc(scanAc(c)).decode(br)
-                  val r = rs >> 4; val s = rs & 0xf
-                  if (s == 0) {
-                    if (r == 15) k += 16 // ZRL
-                    else k = 64          // EOB
-                  } else {
-                    k += r
-                    if (k > 63) return None
-                    coef(jpegZigzag(k)) = jpegExtend(br.bits(s), s) * qt(k)
-                    k += 1
-                  }
-                }
-              } catch { case _: MarkerReached => return None }
-              // ---- IDCT only for the luma component ----
-              if (c == 0) {
-                // rows then columns (separable); tmp holds the row pass
-                var y0 = 0
-                while (y0 < 8) {
-                  var x0 = 0
-                  while (x0 < 8) {
-                    var s = 0.0
-                    var u = 0
-                    while (u < 8) { s += idctCos(x0)(u) * coef(y0 * 8 + u); u += 1 }
-                    tmp(y0)(x0) = s
-                    x0 += 1
-                  }
-                  y0 += 1
-                }
-                // block origin in the (padded, full-res) luma plane — for
-                // subsampled luma (never in practice: Y is max-res) this
-                // still lands correctly because compH(0)==maxH etc.
-                val ox = (mx * compH(c) + bx) * 8 * (maxH / compH(c))
-                val oy = (my * compV(c) + by) * 8 * (maxV / compV(c))
-                var x0 = 0
-                while (x0 < 8) {
-                  var y1 = 0
-                  while (y1 < 8) {
-                    var s = 0.0
-                    var v = 0
-                    while (v < 8) { s += idctCos(y1)(v) * tmp(v)(x0); v += 1 }
-                    val px = math.max(0, math.min(255, math.round(s + 128.0).toInt))
-                    // replicate when Y is subsampled (degenerate case)
-                    val sx = maxH / compH(c); val sy = maxV / compV(c)
-                    var ry = 0
-                    while (ry < sy) {
-                      var rx = 0
-                      while (rx < sx) {
-                        val px0 = ox + x0 * sx + rx; val py0 = oy + y1 * sy + ry
-                        if (px0 < lumaW && py0 < mcusY * 8 * maxV)
-                          luma(py0 * lumaW + px0) = px.toFloat
-                        rx += 1
-                      }
-                      ry += 1
-                    }
-                    y1 += 1
-                  }
-                  x0 += 1
-                }
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          c += 1
-        }
-        sinceRestart += 1
-        mcu += 1
-      }
-      // crop the padded plane to w x h
-      val out = new Array[Float](w * h)
-      var y = 0
-      while (y < h) {
-        System.arraycopy(luma, y * lumaW, out, y * w, w)
-        y += 1
-      }
-      Some((w, h, ncomp, out))
-    } catch { case _: Exception => None }
-  }
-
-  /** REAL progressive-JPEG pixel decode (ITU T.81 Annex G, Huffman only):
-    * spectral-selection bands and successive-approximation bit planes
-    * accumulate across scans into a LUMA coefficient plane, then one
-    * dequantize + IDCT pass renders the pixels. Chroma is never stored:
-    * non-interleaved chroma scans are byte-skipped to the next marker
-    * (scans are self-delimiting), and interleaved DC scans Huffman-decode
-    * chroma only to keep bit position. Same support envelope as the
-    * baseline path (8-bit, 1 or 3 components, sampling ≤ 2); None on
-    * arithmetic coding, 12-bit, or malformed streams. */
-  private[graft] def decodeJpegProgressive(b: Array[Byte]): Option[(Int, Int, Int, Array[Float])] = {
-    try {
-      val quant = new Array[Array[Int]](4)
-      val huffDc = new Array[JpegHuff](4)
-      val huffAc = new Array[JpegHuff](4)
-      var w = 0; var h = 0; var ncomp = 0
-      var compId: Array[Int] = null
-      var compH: Array[Int] = null; var compV: Array[Int] = null
-      var compQ: Array[Int] = null
-      var restartInterval = 0
-      var maxH = 1; var maxV = 1; var mcusX = 0; var mcusY = 0
-      var lumaBw = 0; var lumaBh = 0 // luma block grid, padded to whole MCUs
-      var coefs: Array[Int] = null   // 64 per luma block, natural order
-
-      /** First true marker at/after `from` (skips stuffed FF00 and RSTn):
-        * how a scan's entropy segment is skipped without decoding it. */
-      def nextMarker(from: Int): Int = {
-        var p = from
-        while (p + 1 < b.length) {
-          if ((b(p) & 0xff) == 0xff) {
-            val m = b(p + 1) & 0xff
-            if (m != 0x00 && m != 0xff && !(m >= 0xd0 && m <= 0xd7)) return p
-          }
-          p += 1
-        }
-        b.length
-      }
-
-      var i = 2
-      var sawEoi = false
-      while (!sawEoi) {
-        if (i + 2 > b.length) return None
-        if ((b(i) & 0xff) != 0xff) return None
-        while (i + 2 < b.length && (b(i + 1) & 0xff) == 0xff) i += 1 // FF fill
-        val marker = b(i + 1) & 0xff
-        if (marker == 0xd9) sawEoi = true // EOI carries no length field
-        else {
-          if (i + 4 > b.length) return None
-          val len = u16be(b, i + 2)
-          if (len < 2 || i.toLong + 2 + len > b.length) return None
-          val seg = i + 4
-          var nextAt = i + 2 + len
-          marker match {
-            case 0xc2 => // SOF2
-              if (coefs != null) return None // one frame only
-              if ((b(seg) & 0xff) != 8) return None
-              h = u16be(b, seg + 1); w = u16be(b, seg + 3)
-              ncomp = b(seg + 5) & 0xff
-              if (w <= 0 || h <= 0 || (ncomp != 1 && ncomp != 3)) return None
-              if (w.toLong * h * ncomp > 32L * 1024 * 1024) return None
-              compId = new Array[Int](ncomp)
-              compH = new Array[Int](ncomp); compV = new Array[Int](ncomp)
-              compQ = new Array[Int](ncomp)
-              var c = 0
-              while (c < ncomp) {
-                val o = seg + 6 + 3 * c
-                compId(c) = b(o) & 0xff
-                compH(c) = (b(o + 1) >> 4) & 0xf; compV(c) = b(o + 1) & 0xf
-                compQ(c) = b(o + 2) & 0xf
-                if (compH(c) < 1 || compH(c) > 2 || compV(c) < 1 ||
-                    compV(c) > 2 || compQ(c) > 3) return None
-                c += 1
-              }
-              maxH = compH.max; maxV = compV.max
-              mcusX = (w + 8 * maxH - 1) / (8 * maxH)
-              mcusY = (h + 8 * maxV - 1) / (8 * maxV)
-              lumaBw = mcusX * compH(0); lumaBh = mcusY * compV(0)
-              coefs = new Array[Int](lumaBw * lumaBh * 64)
-            case 0xc0 | 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-                 0xcb | 0xcd | 0xce | 0xcf =>
-              return None // a second/incompatible SOF
-            case 0xdb =>
-              var o = seg
-              while (o < i + 2 + len) {
-                val pq = (b(o) >> 4) & 0xf; val tq = b(o) & 0xf
-                if (pq != 0 || tq > 3) return None
-                quant(tq) = Array.tabulate(64)(k => b(o + 1 + k) & 0xff)
-                o += 65
-              }
-            case 0xc4 =>
-              var o = seg
-              while (o < i + 2 + len) {
-                val tc = (b(o) >> 4) & 0xf; val th = b(o) & 0xf
-                if (tc > 1 || th > 3) return None
-                val counts = Array.tabulate(16)(k => b(o + 1 + k) & 0xff)
-                val n = counts.sum
-                val syms = Array.tabulate(n)(k => b(o + 17 + k) & 0xff)
-                val t = new JpegHuff(counts, syms)
-                if (tc == 0) huffDc(th) = t else huffAc(th) = t
-                o += 17 + n
-              }
-            case 0xdd => restartInterval = u16be(b, seg)
-            case 0xda => // one scan of the progression
-              if (coefs == null) return None
-              val ns = b(seg) & 0xff
-              if (ns < 1 || ns > ncomp) return None
-              val scComp = new Array[Int](ns)
-              val scDc = new Array[Int](ns); val scAc = new Array[Int](ns)
-              var c = 0
-              while (c < ns) {
-                val cid = b(seg + 1 + 2 * c) & 0xff
-                val idx = compId.indexOf(cid)
-                scComp(c) = if (idx >= 0) idx else c // positional fallback
-                scDc(c) = (b(seg + 2 + 2 * c) >> 4) & 0xf
-                scAc(c) = b(seg + 2 + 2 * c) & 0xf
-                c += 1
-              }
-              val ss = b(seg + 1 + 2 * ns) & 0xff
-              val se = b(seg + 2 + 2 * ns) & 0xff
-              val ah = (b(seg + 3 + 2 * ns) >> 4) & 0xf
-              val al = b(seg + 3 + 2 * ns) & 0xf
-              // G.1.1.1: a DC scan is exactly the Ss=Se=0 band, AC scans
-              // are Ss>0 and never interleaved — a baseline-shaped
-              // (0,63) scan mislabeled SOF2 must be rejected, not decoded
-              if (se > 63 || se < ss || (ss == 0 && se != 0) ||
-                  (ns > 1 && ss != 0)) return None
-              val dataAt = i + 2 + len
-              if (!scComp.contains(0)) {
-                // chroma-only scan: its bits can't touch the luma plane —
-                // skip the self-delimited entropy segment wholesale
-                nextAt = nextMarker(dataAt)
-              } else {
-                val br = new JpegBits(b, dataAt)
-                val dcPred = new Array[Int](ncomp)
-                var eobrun = 0
-                val p1 = 1 << al
-
-                // ---- one luma block's AC band, first pass (Ah == 0) ----
-                def acFirst(off: Int, acTab: JpegHuff): Unit = {
-                  if (eobrun > 0) { eobrun -= 1; return }
-                  var k = ss
-                  while (k <= se) {
-                    val rs = acTab.decode(br)
-                    val r = rs >> 4; val s = rs & 0xf
-                    if (s == 0) {
-                      if (r == 15) k += 16 // ZRL
-                      else {               // EOBn: run of all-zero bands
-                        eobrun = (1 << r) - 1
-                        if (r > 0) eobrun += br.bits(r)
-                        return
-                      }
-                    } else {
-                      k += r
-                      if (k > se) throw new IllegalArgumentException("AC run past Se")
-                      coefs(off + jpegZigzag(k)) = jpegExtend(br.bits(s), s) << al
-                      k += 1
-                    }
-                  }
-                }
-
-                // ---- one luma block's AC band, refinement (T.81 G.1.2.3):
-                // correction bits for already-nonzero coefficients read in
-                // coefficient order as each symbol's span is walked ----
-                def acRefine(off: Int, acTab: JpegHuff): Unit = {
-                  var k = ss
-                  if (eobrun == 0) {
-                    var eob = false
-                    while (!eob && k <= se) {
-                      val rs = acTab.decode(br)
-                      var r = rs >> 4; val s = rs & 0xf
-                      var insert = 0
-                      if (s == 0) {
-                        if (r < 15) {
-                          eobrun = 1 << r
-                          if (r > 0) eobrun += br.bits(r)
-                          eob = true // tail handled below, then eobrun -= 1
-                        } // r == 15: ZRL — skip 16 zero-history coefficients
-                      } else {
-                        if (s != 1) throw new IllegalArgumentException("bad refine size")
-                        insert = if (br.bit() == 1) p1 else -p1
-                      }
-                      if (!eob) {
-                        var placed = false
-                        while (!placed && k <= se) {
-                          val z = off + jpegZigzag(k)
-                          if (coefs(z) != 0) {
-                            if (br.bit() == 1 && (coefs(z) & p1) == 0)
-                              coefs(z) += (if (coefs(z) >= 0) p1 else -p1)
-                          } else if (r == 0) {
-                            if (insert != 0) coefs(z) = insert
-                            placed = true
-                          } else r -= 1
-                          k += 1
-                        }
-                        if (!placed && insert != 0)
-                          throw new IllegalArgumentException("no slot in band")
-                      }
-                    }
-                  }
-                  if (eobrun > 0) {
-                    while (k <= se) { // corrections continue through the EOB tail
-                      val z = off + jpegZigzag(k)
-                      if (coefs(z) != 0) {
-                        if (br.bit() == 1 && (coefs(z) & p1) == 0)
-                          coefs(z) += (if (coefs(z) >= 0) p1 else -p1)
-                      }
-                      k += 1
-                    }
-                    eobrun -= 1
-                  }
-                }
-
-                def restartIfDue(sinceRestart: Int): Boolean =
-                  if (restartInterval > 0 && sinceRestart == restartInterval) {
-                    br.restart()
-                    java.util.Arrays.fill(dcPred, 0)
-                    eobrun = 0
-                    true
-                  } else false
-
-                if (ns > 1) {
-                  // interleaved scan: DC only (Ss == 0 enforced above).
-                  // Chroma blocks decode (or read their 1 bit) to stay in
-                  // step but never store.
-                  var mcu = 0; var sinceRestart = 0
-                  val nMcus = mcusX * mcusY
-                  while (mcu < nMcus) {
-                    if (restartIfDue(sinceRestart)) sinceRestart = 0
-                    val mx = mcu % mcusX; val my = mcu / mcusX
-                    var c = 0
-                    while (c < ns) {
-                      val comp = scComp(c)
-                      var by = 0
-                      while (by < compV(comp)) {
-                        var bx = 0
-                        while (bx < compH(comp)) {
-                          if (ah == 0) {
-                            val t = huffDc(scDc(c)).decode(br)
-                            dcPred(comp) += jpegExtend(br.bits(t), t)
-                            if (comp == 0) {
-                              val blk = (my * compV(0) + by) * lumaBw + (mx * compH(0) + bx)
-                              coefs(blk * 64) = dcPred(comp) << al
-                            }
-                          } else {
-                            val bit = br.bit()
-                            if (comp == 0 && bit == 1) {
-                              val blk = (my * compV(0) + by) * lumaBw + (mx * compH(0) + bx)
-                              coefs(blk * 64) |= p1
-                            }
-                          }
-                          bx += 1
-                        }
-                        by += 1
-                      }
-                      c += 1
-                    }
-                    sinceRestart += 1; mcu += 1
-                  }
-                } else {
-                  // non-interleaved LUMA scan (chroma was skipped above):
-                  // raster over the component's ceil-block grid, which can
-                  // be narrower than the padded MCU grid
-                  val cw = (w * compH(0) + 8 * maxH - 1) / (8 * maxH)
-                  val ch = (h * compV(0) + 8 * maxV - 1) / (8 * maxV)
-                  if (ss == 0 && huffDc(scDc(0)) == null) return None
-                  if (ss > 0 && huffAc(scAc(0)) == null) return None
-                  var blk = 0; var sinceRestart = 0
-                  val nBlks = cw * ch
-                  while (blk < nBlks) {
-                    if (restartIfDue(sinceRestart)) sinceRestart = 0
-                    val off = ((blk / cw) * lumaBw + blk % cw) * 64
-                    if (ss == 0) {
-                      if (ah == 0) {
-                        val t = huffDc(scDc(0)).decode(br)
-                        dcPred(0) += jpegExtend(br.bits(t), t)
-                        coefs(off) = dcPred(0) << al
-                      } else if (br.bit() == 1) coefs(off) |= p1
-                    } else if (ah == 0) acFirst(off, huffAc(scAc(0)))
-                    else acRefine(off, huffAc(scAc(0)))
-                    sinceRestart += 1; blk += 1
-                  }
-                }
-                nextAt = nextMarker(br.pos)
-              }
-            case _ => () // APPn/COM/...
-          }
-          i = nextAt
-        }
-      }
-      if (coefs == null) return None
-      val qt = quant(compQ(0))
-      if (qt == null) return None
-      // dequantize + IDCT every luma block into the padded plane, then crop
-      val lumaW = mcusX * 8 * maxH; val lumaH = mcusY * 8 * maxV
-      val luma = new Array[Float](lumaW * lumaH)
-      val sx = maxH / compH(0); val sy = maxV / compV(0)
-      val dq = new Array[Double](64)
-      val tmp = Array.ofDim[Double](8, 8)
-      var by = 0
-      while (by < lumaBh) {
-        var bx = 0
-        while (bx < lumaBw) {
-          val off = (by * lumaBw + bx) * 64
-          var k = 0
-          while (k < 64) { // qt is zigzag-ordered, coefs natural-ordered
-            val z = jpegZigzag(k)
-            dq(z) = coefs(off + z).toDouble * qt(k)
-            k += 1
-          }
-          var y0 = 0
-          while (y0 < 8) { // separable IDCT: rows into tmp, then columns
-            var x0 = 0
-            while (x0 < 8) {
-              var s = 0.0; var u = 0
-              while (u < 8) { s += idctCos(x0)(u) * dq(y0 * 8 + u); u += 1 }
-              tmp(y0)(x0) = s
-              x0 += 1
-            }
-            y0 += 1
-          }
-          var x0 = 0
-          while (x0 < 8) {
-            var y1 = 0
-            while (y1 < 8) {
-              var s = 0.0; var v = 0
-              while (v < 8) { s += idctCos(y1)(v) * tmp(v)(x0); v += 1 }
-              val px = math.max(0, math.min(255, math.round(s + 128.0).toInt))
-              var ry = 0
-              while (ry < sy) {
-                var rx = 0
-                while (rx < sx) {
-                  val px0 = (bx * 8 + x0) * sx + rx
-                  val py0 = (by * 8 + y1) * sy + ry
-                  if (px0 < lumaW && py0 < lumaH)
-                    luma(py0 * lumaW + px0) = px.toFloat
-                  rx += 1
-                }
-                ry += 1
-              }
-              y1 += 1
-            }
-            x0 += 1
-          }
-          bx += 1
-        }
-        by += 1
-      }
-      val out = new Array[Float](w * h)
-      var y = 0
-      while (y < h) {
-        System.arraycopy(luma, y * lumaW, out, y * w, w)
-        y += 1
-      }
-      Some((w, h, ncomp, out))
-    } catch { case _: Exception => None }
-  }
-
-  /** GIF LZW decompression (the variable-code-width LZW variant the
-    * GIF89a spec defines, LSB-first bit packing). `data` is the
-    * concatenated image sub-block bytes; emits at most `nPixels` palette
-    * indices. A truncated stream returns the pixels decoded so far (the
-    * canvas keeps its prior content there) — only a structurally invalid
-    * code stream returns None. */
-  private def gifLzw(data: Array[Byte], minCode: Int, nPixels: Int): Option[Array[Int]] = {
-    if (minCode < 2 || minCode > 11 || nPixels <= 0) return None
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val stack = new Array[Byte](4097)
-    var dictSize = eoi + 1
-    var codeSize = minCode + 1
-    val out = new Array[Int](nPixels)
-    var outN = 0
-    var bitPos = 0L
-    val bitEnd = data.length.toLong * 8
-    def read(): Int = {
-      if (bitPos + codeSize > bitEnd) return -1
-      var v = 0; var k = 0
-      while (k < codeSize) {
-        val p = bitPos + k
-        v |= ((data((p >> 3).toInt) >> (p & 7).toInt) & 1) << k
-        k += 1
-      }
-      bitPos += codeSize
-      v
-    }
-    // first code of a dictionary entry's expansion: walk the prefix chain
-    def firstOf(code: Int): Int = {
-      var c = code
-      while (c >= clear) c = prefix(c)
-      c
-    }
-    var prev = -1
-    var done = false
-    while (!done && outN < nPixels) {
-      val code = read()
-      if (code < 0 || code == eoi) done = true // truncated or EOI: accept partial
-      else if (code == clear) {
-        dictSize = eoi + 1; codeSize = minCode + 1; prev = -1
-      } else if (prev == -1) {
-        if (code >= clear) return None // first code after clear must be a literal
-        out(outN) = code; outN += 1; prev = code
-      } else {
-        var emitFirst = 0
-        var top = 0
-        if (code < dictSize) {
-          // known code: push its expansion (reverse order) onto the stack
-          var c = code
-          while (c >= clear) { stack(top) = suffix(c); top += 1; c = prefix(c) }
-          stack(top) = c.toByte; top += 1
-          emitFirst = c
-        } else if (code == dictSize) {
-          // the K-omega-K case: expansion = string(prev) + firstOf(prev)
-          val f = firstOf(prev)
-          stack(top) = f.toByte; top += 1
-          var c = prev
-          while (c >= clear) { stack(top) = suffix(c); top += 1; c = prefix(c) }
-          stack(top) = c.toByte; top += 1
-          emitFirst = c
-        } else return None // code beyond dict+1: invalid stream
-        while (top > 0 && outN < nPixels) {
-          top -= 1; out(outN) = stack(top) & 0xff; outN += 1
-        }
-        if (dictSize < 4096) {
-          prefix(dictSize) = prev; suffix(dictSize) = emitFirst.toByte
-          dictSize += 1
-          if (dictSize == (1 << codeSize) && codeSize < 12) codeSize += 1
-        }
-        prev = code
-      }
-    }
-    Some(java.util.Arrays.copyOf(out, outN))
-  }
-
-  /** Palette entry → 8-bit luma, same Rec. 601 weights as the PNG path. */
-  private def gifLuma(pal: Array[Byte], idx: Int): Float = {
-    val p = idx * 3
-    if (p + 2 >= pal.length) 0.0f
-    else 0.299f * (pal(p) & 0xff) + 0.587f * (pal(p + 1) & 0xff) +
-      0.114f * (pal(p + 2) & 0xff)
-  }
-
-  /** Skip a chain of GIF data sub-blocks starting at `start`; returns the
-    * index just past the 0x00 terminator (or b.length when truncated).
-    * Cursor arithmetic in Long — sub-block lengths are untrusted bytes. */
-  private def gifSkipSub(b: Array[Byte], start: Int): Int = {
-    var i = start.toLong
-    while (i < b.length) {
-      val n = b(i.toInt) & 0xff
-      if (n == 0) return (i + 1).toInt
-      i += 1 + n
-    }
-    b.length
-  }
-
-  /** REAL GIF decode — GIF87a/GIF89a per the public CompuServe/W3C spec:
-    * logical-screen + global/local color tables, per-image LZW
-    * decompression ([[gifLzw]]), 4-pass interlace, and GIF89a Graphic
-    * Control Extension semantics (transparency index, disposal methods
-    * none/keep/restore-to-background/restore-to-previous) composited
-    * frame-by-frame onto the logical screen. Returns
-    * (screenW, screenH, totalFrames, per-frame 16-dim grid features
-    * (≤ maxDecode decoded), first-frame full luma plane). Frame count
-    * keeps counting past maxDecode via header-only sub-block skips.
-    * All allocation is capped (canvas ≤ 16M pixels) and every cursor
-    * uses the Long-arithmetic pattern the other byte walks share; corrupt
-    * bytes degrade to the already-decoded prefix or None, never a throw. */
-  private[graft] def decodeGif(b: Array[Byte], maxDecode: Int = 64)
-      : Option[(Int, Int, Int, Array[Array[Float]], Array[Float])] = {
-    try {
-      if (b == null || b.length < 14) return None
-      if (!(b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
-            (b(4) == '7' || b(4) == '9') && b(5) == 'a')) return None
-      val sw = u16le(b, 6); val sh = u16le(b, 8)
-      if (sw <= 0 || sh <= 0 || sw.toLong * sh > (16L << 20)) return None
-      val packed = b(10) & 0xff
-      var i = 13
-      var gct: Array[Byte] = null
-      if ((packed & 0x80) != 0) {
-        val n = 2 << (packed & 7)
-        if (i + 3 * n > b.length) return None
-        gct = java.util.Arrays.copyOfRange(b, i, i + 3 * n)
-        i += 3 * n
-      }
-      val canvas = new Array[Float](sw * sh)
-      val bgIdx = b(11) & 0xff
-      val bgLuma = if (gct != null) gifLuma(gct, bgIdx) else 0.0f
-      java.util.Arrays.fill(canvas, bgLuma)
-      var transparent = -1
-      var disposal = 0
-      var frames = 0
-      var firstLuma: Array[Float] = null
-      val grids = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-      var walking = true
-      while (walking && i < b.length) {
-        (b(i) & 0xff) match {
-          case 0x3b => walking = false // trailer
-          case 0x21 => // extension block: [label][sub-blocks...0]
-            if (i + 2 > b.length) { walking = false }
-            else {
-              val label = b(i + 1) & 0xff
-              i += 2
-              // GIF89a Graphic Control Extension: disposal + transparency
-              if (label == 0xf9 && i + 5 <= b.length && (b(i) & 0xff) >= 4) {
-                val flags = b(i + 1) & 0xff
-                disposal = (flags >> 2) & 7
-                transparent = if ((flags & 1) != 0) b(i + 4) & 0xff else -1
-              }
-              i = gifSkipSub(b, i)
-            }
-          case 0x2c => // image descriptor
-            if (i + 10 > b.length) { walking = false }
-            else {
-              val left = u16le(b, i + 1); val top = u16le(b, i + 3)
-              val fw = u16le(b, i + 5); val fh = u16le(b, i + 7)
-              val ip = b(i + 9) & 0xff
-              i += 10
-              var lct: Array[Byte] = null
-              if ((ip & 0x80) != 0) {
-                val n = 2 << (ip & 7)
-                if (i + 3 * n > b.length) return finishGif(sw, sh, frames, grids, firstLuma)
-                lct = java.util.Arrays.copyOfRange(b, i, i + 3 * n)
-                i += 3 * n
-              }
-              val pal = if (lct != null) lct else gct
-              if (i >= b.length) return finishGif(sw, sh, frames, grids, firstLuma)
-              if (pal == null || fw <= 0 || fh <= 0 ||
-                  left.toLong + fw > sw || top.toLong + fh > sh) {
-                // undrawable frame (no color table / out-of-bounds rect):
-                // count it, skip its data, composite nothing
-                frames += 1
-                i += 1 // skip the LZW min-code-size byte
-                i = gifSkipSub(b, i)
-              } else {
-                val minCode = b(i) & 0xff; i += 1
-                frames += 1
-                if (frames <= maxDecode) {
-                  // concatenate the image's data sub-blocks
-                  val buf = new java.io.ByteArrayOutputStream()
-                  var j = i.toLong
-                  var sub = true
-                  while (sub && j < b.length) {
-                    val n = b(j.toInt) & 0xff
-                    if (n == 0) sub = false
-                    else {
-                      val upTo = math.min(b.length.toLong, j + 1 + n).toInt
-                      buf.write(b, (j + 1).toInt, upTo - (j + 1).toInt)
-                      j += 1 + n
-                    }
-                  }
-                  gifLzw(buf.toByteArray, minCode, fw * fh) match {
-                    case Some(px) =>
-                      // disposal 3: snapshot the canvas to restore after
-                      val saved =
-                        if (disposal == 3) java.util.Arrays.copyOf(canvas, canvas.length)
-                        else null
-                      // composite: sequential decoded rows map through the
-                      // 4-pass interlace grid when the interlace flag is set
-                      var row = 0
-                      var pass = 0
-                      val passStart = Array(0, 4, 2, 1)
-                      val passStep = Array(8, 8, 4, 2)
-                      var oy = 0
-                      var k = 0
-                      while (row < fh && k < px.length) {
-                        val destY =
-                          if ((ip & 0x40) != 0) oy
-                          else row
-                        var x = 0
-                        while (x < fw && k < px.length) {
-                          val idx = px(k)
-                          if (idx != transparent)
-                            canvas((top + destY) * sw + (left + x)) = gifLuma(pal, idx)
-                          k += 1; x += 1
-                        }
-                        row += 1
-                        if ((ip & 0x40) != 0) {
-                          oy += passStep(pass)
-                          while (pass < 3 && oy >= fh) {
-                            pass += 1; oy = passStart(pass)
-                          }
-                        }
-                      }
-                      grids += gridPool16(sw, sh, canvas)
-                      if (firstLuma == null)
-                        firstLuma = java.util.Arrays.copyOf(canvas, canvas.length)
-                      // post-frame disposal for the NEXT frame's base
-                      if (disposal == 2) {
-                        var y = 0
-                        while (y < fh) {
-                          var x = 0
-                          while (x < fw) {
-                            canvas((top + y) * sw + (left + x)) = bgLuma
-                            x += 1
-                          }
-                          y += 1
-                        }
-                      } else if (disposal == 3 && saved != null) {
-                        System.arraycopy(saved, 0, canvas, 0, canvas.length)
-                      }
-                    case None =>
-                      return finishGif(sw, sh, frames, grids, firstLuma)
-                  }
-                }
-                i = gifSkipSub(b, i)
-              }
-              transparent = -1; disposal = 0
-            }
-          case _ => walking = false // unknown block type: accept the prefix
-        }
-      }
-      finishGif(sw, sh, frames, grids, firstLuma)
-    } catch { case _: Exception => None }
-  }
-
-  private def finishGif(sw: Int, sh: Int, frames: Int,
-                        grids: scala.collection.mutable.ArrayBuffer[Array[Float]],
-                        firstLuma: Array[Float])
-      : Option[(Int, Int, Int, Array[Array[Float]], Array[Float])] =
-    if (frames == 0 || grids.isEmpty || firstLuma == null) None
-    else Some((sw, sh, frames, grids.toArray, firstLuma))
-
-  /** First decoded GIF frame as a full luma plane — the shape the image
-    * resize path consumes (mirrors [[decodePngLuma]]/[[decodeJpegLuma]]). */
-  private[graft] def decodeGifLuma(b: Array[Byte]): Option[(Int, Int, Int, Array[Float])] =
-    decodeGif(b, maxDecode = 1).map { case (w, h, _, _, luma) => (w, h, 3, luma) }
-
-  /** TIFF LZW decompression (TIFF 6.0 §13): unlike GIF's, codes pack
-    * MSB-first, start at 9 bits from a 256-symbol alphabet (clear=256,
-    * EOI=257, first free 258) and use the spec's EARLY code-width change
-    * (width grows when the next free code is 2^width - 1). A truncated
-    * stream returns the bytes decoded so far. */
-  private def tiffLzw(data: Array[Byte], maxOut: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val stack = new Array[Byte](4097)
-    var dictSize = 258
-    var codeSize = 9
-    var bitPos = 0L
-    val bitEnd = data.length.toLong * 8
-    def read(): Int = {
-      if (bitPos + codeSize > bitEnd) return -1
-      var v = 0; var k = 0
-      while (k < codeSize) {
-        val p = bitPos + k
-        v = (v << 1) | ((data((p >> 3).toInt) >> (7 - (p & 7).toInt)) & 1)
-        k += 1
-      }
-      bitPos += codeSize
-      v
-    }
-    var prev = -1
-    var done = false
-    while (!done && out.size < maxOut) {
-      val code = read()
-      if (code < 0 || code == 257) done = true
-      else if (code == 256) { dictSize = 258; codeSize = 9; prev = -1 }
-      else if (prev == -1) {
-        if (code >= 256) return out.toByteArray
-        out.write(code); prev = code
-      } else {
-        var top = 0
-        var emitFirst = 0
-        if (code < dictSize && code != 256 && code != 257) {
-          var c = code
-          while (c >= 258) { stack(top) = suffix(c); top += 1; c = prefix(c) }
-          stack(top) = c.toByte; top += 1
-          emitFirst = c
-        } else if (code == dictSize) {
-          var c = prev
-          var f = c
-          while (f >= 258) f = prefix(f)
-          stack(top) = f.toByte; top += 1
-          while (c >= 258) { stack(top) = suffix(c); top += 1; c = prefix(c) }
-          stack(top) = c.toByte; top += 1
-          emitFirst = f
-        } else return out.toByteArray
-        while (top > 0 && out.size < maxOut) {
-          top -= 1; out.write(stack(top) & 0xff)
-        }
-        if (dictSize < 4096) {
-          prefix(dictSize) = prev; suffix(dictSize) = emitFirst.toByte
-          dictSize += 1
-          // EARLY change: grow when the NEXT code to assign is 2^w - 1
-          if (dictSize == (1 << codeSize) - 1 && codeSize < 12) codeSize += 1
-        }
-        prev = code
-      }
-    }
-    out.toByteArray
-  }
-
-  /** TIFF PackBits decompression (TIFF 6.0 §9 — the classic Apple RLE):
-    * n in [0,127] copies n+1 literals, n in [-127,-1] repeats the next
-    * byte 1-n times, -128 is a no-op. */
-  private def tiffPackBits(data: Array[Byte], maxOut: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var i = 0
-    while (i < data.length && out.size < maxOut) {
-      val n = data(i); i += 1
-      if (n >= 0) {
-        val cnt = math.min(n + 1, data.length - i)
-        out.write(data, i, math.max(0, cnt)); i += n + 1
-      } else if (n != -128 && i < data.length) {
-        val v = data(i); i += 1
-        var k = 0
-        while (k < 1 - n && out.size < maxOut) { out.write(v); k += 1 }
-      }
-    }
-    out.toByteArray
-  }
-
-  /** REAL TIFF decode — TIFF 6.0 (public spec): both byte orders, IFD
-    * walk, strip-organized baseline images. Supported lattice:
-    * compressions none/LZW ([[tiffLzw]], with the horizontal-differencing
-    * predictor)/PackBits; photometrics WhiteIsZero, BlackIsZero, RGB and
-    * Palette (16-bit ColorMap scaled /257); bits-per-sample 1/4/8 gray,
-    * 16 gray (high byte), 8x3 RGB chunky. Tiled layouts and planar
-    * configuration 2 reject to the fold tier. Untrusted offsets: every
-    * cursor in Long, 16M-pixel allocation cap, corrupt input → None. */
-  private[graft] def decodeTiffLuma(b: Array[Byte]): Option[(Int, Int, Int, Array[Float])] = {
-    try {
-      if (b == null || b.length < 8) return None
-      val le =
-        if (b(0) == 'I' && b(1) == 'I' && b(2) == 42 && b(3) == 0) true
-        else if (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && b(3) == 42) false
-        else return None
-      def u16(i: Long): Int =
-        if (le) u16le(b, i.toInt) else u16be(b, i.toInt)
-      def u32(i: Long): Long =
-        (if (le) u32le(b, i.toInt) else u32be(b, i.toInt)).toLong & 0xffffffffL
-      val ifdOff = u32(4)
-      if (ifdOff + 2 > b.length) return None
-      val nEntries = u16(ifdOff)
-      if (nEntries <= 0 || ifdOff + 2 + 12L * nEntries > b.length) return None
-      var w = 0; var h = 0; var comp = 1; var photo = 1
-      var bitsPS = 8; var spp = 1; var rowsPerStrip = Int.MaxValue
-      var predictor = 1; var planar = 1
-      var stripOffs: Array[Long] = null
-      var stripLens: Array[Long] = null
-      var cmapOff = -1L; var cmapCount = 0
-      var e = 0
-      while (e < nEntries) {
-        val at = ifdOff + 2 + 12L * e
-        val tag = u16(at)
-        val typ = u16(at + 2)
-        val cnt = u32(at + 4)
-        val tsize = typ match {
-          case 1 | 2 | 6 | 7 => 1L; case 3 => 2L; case 4 | 9 => 4L; case _ => 8L
-        }
-        val inline = tsize * cnt <= 4
-        def valAt(k: Long): Long = {
-          val base = if (inline) at + 8 else u32(at + 8)
-          val p = base + k * tsize
-          if (p + tsize > b.length) throw new java.io.EOFException
-          typ match {
-            case 3 => u16(p).toLong
-            case 4 | 9 => u32(p)
-            case 1 | 2 | 6 | 7 => (b(p.toInt) & 0xff).toLong
-            case _ => throw new java.io.EOFException
-          }
-        }
-        tag match {
-          case 256 => w = valAt(0).toInt
-          case 257 => h = valAt(0).toInt
-          case 258 => bitsPS = valAt(0).toInt // uniform across samples assumed
-          case 259 => comp = valAt(0).toInt
-          case 262 => photo = valAt(0).toInt
-          case 273 => stripOffs = Array.tabulate(cnt.toInt)(k => valAt(k))
-          case 277 => spp = valAt(0).toInt
-          case 278 => rowsPerStrip = math.min(valAt(0), Int.MaxValue.toLong).toInt
-          case 279 => stripLens = Array.tabulate(cnt.toInt)(k => valAt(k))
-          case 284 => planar = valAt(0).toInt
-          case 317 => predictor = valAt(0).toInt
-          case 320 =>
-            cmapOff = if (inline) at + 8 else u32(at + 8); cmapCount = cnt.toInt
-          case 322 | 323 | 324 | 325 => return None // tiled layout unsupported
-          case _ => ()
-        }
-        e += 1
-      }
-      if (w <= 0 || h <= 0 || w.toLong * h > (16L << 20)) return None
-      if (stripOffs == null || stripLens == null ||
-          stripOffs.length != stripLens.length) return None
-      if (planar != 1 || spp < 1 || spp > 8) return None
-      if (comp != 1 && comp != 5 && comp != 32773) return None
-      if (photo < 0 || photo > 3) return None
-      if (photo == 2 && (spp < 3 || bitsPS != 8)) return None
-      if (photo == 3 && (bitsPS != 4 && bitsPS != 8)) return None
-      if (photo <= 1 && !Set(1, 4, 8, 16).contains(bitsPS)) return None
-      if (rowsPerStrip <= 0) rowsPerStrip = h
-      // palette: ColorMap is 3 * 2^bitsPS SHORTs (all R, all G, all B)
-      var palLuma: Array[Float] = null
-      if (photo == 3) {
-        val n = 1 << bitsPS
-        if (cmapOff < 0 || cmapCount < 3 * n ||
-            cmapOff + 2L * 3 * n > b.length) return None
-        palLuma = Array.tabulate(n) { k =>
-          val r = u16(cmapOff + 2L * k) / 257
-          val g = u16(cmapOff + 2L * (n + k)) / 257
-          val bl = u16(cmapOff + 2L * (2 * n + k)) / 257
-          0.299f * r + 0.587f * g + 0.114f * bl
-        }
-      }
-      val rowBytes = (w.toLong * spp * bitsPS + 7) / 8
-      if (rowBytes > Int.MaxValue / 2) return None
-      val luma = new Array[Float](w * h)
-      var strip = 0
-      var y0 = 0
-      while (strip < stripOffs.length && y0 < h) {
-        val off = stripOffs(strip)
-        val len = stripLens(strip)
-        if (off < 0 || len < 0 || off + len > b.length) return None
-        val rows = math.min(rowsPerStrip, h - y0)
-        val wantBytes = (rowBytes * rows).toInt
-        val raw = comp match {
-          case 1 =>
-            java.util.Arrays.copyOfRange(b, off.toInt,
-              math.min(b.length.toLong, off + math.min(len, wantBytes)).toInt)
-          case 5 =>
-            tiffLzw(java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt), wantBytes)
-          case _ =>
-            tiffPackBits(java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt), wantBytes)
-        }
-        // horizontal-differencing predictor (only defined for 8-bit samples)
-        if (predictor == 2 && bitsPS == 8) {
-          var r = 0
-          while (r < rows) {
-            val base = (r * rowBytes).toInt
-            var x = spp
-            while (x < w * spp && base + x < raw.length) {
-              raw(base + x) = (raw(base + x) + raw(base + x - spp)).toByte
-              x += 1
-            }
-            r += 1
-          }
-        }
-        var r = 0
-        while (r < rows && y0 + r < h) {
-          val base = r * rowBytes
-          var x = 0
-          while (x < w) {
-            val v: Float = photo match {
-              case 2 => // RGB chunky
-                val p = (base + x.toLong * spp).toInt
-                if (p + 2 >= raw.length) 0.0f
-                else 0.299f * (raw(p) & 0xff) + 0.587f * (raw(p + 1) & 0xff) +
-                  0.114f * (raw(p + 2) & 0xff)
-              case 3 => // palette
-                val p = base + (x.toLong * bitsPS) / 8
-                if (p >= raw.length) 0.0f
-                else {
-                  val byteV = raw(p.toInt) & 0xff
-                  val idx =
-                    if (bitsPS == 8) byteV
-                    else if ((x & 1) == 0) (byteV >> 4) & 0xf
-                    else byteV & 0xf
-                  palLuma(math.min(idx, palLuma.length - 1))
-                }
-              case _ => // grayscale (0 = WhiteIsZero inverts)
-                val g: Int = bitsPS match {
-                  case 1 =>
-                    val p = base + (x >> 3)
-                    if (p >= raw.length) 0
-                    else (((raw(p.toInt) >> (7 - (x & 7))) & 1) * 255)
-                  case 4 =>
-                    val p = base + (x >> 1)
-                    if (p >= raw.length) 0
-                    else {
-                      val nib = (raw(p.toInt) >> (if ((x & 1) == 0) 4 else 0)) & 0xf
-                      nib * 17
-                    }
-                  case 8 =>
-                    val p = base + x.toLong * spp
-                    if (p >= raw.length) 0 else raw(p.toInt) & 0xff
-                  case _ =>
-                    val p = base + x.toLong * spp * 2
-                    if (p + 1 >= raw.length) 0
-                    else if (le) raw(p.toInt + 1) & 0xff // high byte
-                    else raw(p.toInt) & 0xff
-                }
-                (if (photo == 0) 255 - g else g).toFloat
-            }
-            luma((y0 + r) * w + x) = v
-            x += 1
-          }
-          r += 1
-        }
-        y0 += rows
-        strip += 1
-      }
-      Some((w, h, if (photo == 2) spp else 3, luma))
-    } catch { case _: Exception => None }
-  }
-
-  /** TIFF geometry-only IFD walk — the fallback when [[decodeTiffLuma]]
-    * rejects (tiled layout, exotic compression, corrupt strip data). */
-  private[graft] def probeTiff(b: Array[Byte]): Option[(Int, Int, Int)] = {
-    try {
-      if (b == null || b.length < 8) return None
-      val le =
-        if (b(0) == 'I' && b(1) == 'I' && b(2) == 42 && b(3) == 0) true
-        else if (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && b(3) == 42) false
-        else return None
-      def u16(i: Long): Int = if (le) u16le(b, i.toInt) else u16be(b, i.toInt)
-      def u32(i: Long): Long =
-        (if (le) u32le(b, i.toInt) else u32be(b, i.toInt)).toLong & 0xffffffffL
-      val ifdOff = u32(4)
-      if (ifdOff + 2 > b.length) return None
-      val nEntries = u16(ifdOff)
-      if (nEntries <= 0 || ifdOff + 2 + 12L * nEntries > b.length) return None
-      var w = 0; var h = 0; var spp = 1
-      var e = 0
-      while (e < nEntries) {
-        val at = ifdOff + 2 + 12L * e
-        val tag = u16(at)
-        val typ = u16(at + 2)
-        def inlineVal: Int =
-          (if (typ == 3) u16(at + 8).toLong else u32(at + 8)).toInt
-        tag match {
-          case 256 => w = inlineVal
-          case 257 => h = inlineVal
-          case 277 => spp = inlineVal
-          case _ => ()
-        }
-        e += 1
-      }
-      if (w > 0 && h > 0) Some((w, h, math.max(1, math.min(spp, 8)))) else None
-    } catch { case _: Exception => None }
-  }
-
-  /** MSB-first bit reader over untrusted bytes: every read bounds-checks
-    * against the buffer end and throws (caught by the per-frame decode
-    * loop) instead of wrapping. Unary reads are run-length capped so a
-    * crafted all-zeros region can't spin. */
-  private final class FlacBits(b: Array[Byte], startBit: Long) {
-    var pos: Long = startBit
-    private val end: Long = b.length.toLong * 8
-    def remaining: Long = end - pos
-    def read(n: Int): Int = {
-      if (n == 0) return 0
-      if (n < 0 || n > 32 || pos + n > end) throw new java.io.EOFException
-      var v = 0; var k = 0
-      while (k < n) {
-        val p = pos + k
-        v = (v << 1) | ((b((p >> 3).toInt) >> (7 - (p & 7).toInt)) & 1)
-        k += 1
-      }
-      pos += n
-      v
-    }
-    def readSigned(n: Int): Int = {
-      val v = read(n)
-      if (n == 0 || n == 32) v else (v << (32 - n)) >> (32 - n)
-    }
-    def readUnary(): Int = {
-      var q = 0
-      while (read(1) == 0) {
-        q += 1
-        if (q > (1 << 24)) throw new java.io.EOFException
-      }
-      q
-    }
-    def alignByte(): Unit = { pos = (pos + 7) & ~7L }
-  }
-
-  /** FLAC rice-coded residual per the public RFC 9639 §9.2.7: partition
-    * order, per-partition rice parameter (4- or 5-bit form) with the
-    * all-ones escape to fixed-width raw residuals, unary quotient +
-    * parameter-bit remainder, zig-zag sign folding. Fills
-    * out[order, n). */
-  private def flacResidual(bits: FlacBits, n: Int, order: Int,
-                           out: Array[Int]): Unit = {
-    val method = bits.read(2)
-    if (method > 1) throw new java.io.EOFException
-    val pbits = if (method == 0) 4 else 5
-    val escape = (1 << pbits) - 1
-    val partOrder = bits.read(4)
-    val parts = 1 << partOrder
-    if (parts > n || n % parts != 0) throw new java.io.EOFException
-    var k = order
-    var p = 0
-    while (p < parts) {
-      val cnt = (n >> partOrder) - (if (p == 0) order else 0)
-      if (cnt < 0) throw new java.io.EOFException
-      val param = bits.read(pbits)
-      var j = 0
-      if (param == escape) {
-        val raw = bits.read(5)
-        while (j < cnt) {
-          out(k) = if (raw == 0) 0 else bits.readSigned(raw)
-          k += 1; j += 1
-        }
-      } else {
-        while (j < cnt) {
-          val q = bits.readUnary()
-          val r = if (param == 0) 0 else bits.read(param)
-          val u = (q.toLong << param) | (r.toLong & 0xffffffffL)
-          out(k) = ((u >>> 1) ^ -(u & 1L)).toInt
-          k += 1; j += 1
-        }
-      }
-      p += 1
-    }
-  }
-
-  /** One FLAC subframe (RFC 9639 §9.2.5-9.2.6): CONSTANT, VERBATIM, FIXED
-    * orders 0-4 (the published warm-up + polynomial predictors) and LPC
-    * orders 1-32 (signed quantized coefficients, signed shift), plus the
-    * wasted-bits unary prefix. Prediction sums run in Long. */
-  private def flacSubframe(bits: FlacBits, n: Int, bpsIn: Int): Array[Int] = {
-    if (bits.read(1) != 0) throw new java.io.EOFException // mandatory 0 pad
-    val typ = bits.read(6)
-    var wasted = 0
-    if (bits.read(1) == 1) {
-      wasted = 1
-      while (bits.read(1) == 0) {
-        wasted += 1
-        if (wasted > 32) throw new java.io.EOFException
-      }
-    }
-    val bps = bpsIn - wasted
-    if (bps < 1 || bps > 32) throw new java.io.EOFException
-    val out = new Array[Int](n)
-    if (typ == 0) { // CONSTANT
-      java.util.Arrays.fill(out, bits.readSigned(bps))
-    } else if (typ == 1) { // VERBATIM
-      var k = 0
-      while (k < n) { out(k) = bits.readSigned(bps); k += 1 }
-    } else if (typ >= 8 && typ <= 12) { // FIXED, order = typ - 8
-      val order = typ - 8
-      if (order > n) throw new java.io.EOFException
-      var k = 0
-      while (k < order) { out(k) = bits.readSigned(bps); k += 1 }
-      flacResidual(bits, n, order, out)
-      k = order
-      while (k < n) {
-        val pred: Long = order match {
-          case 0 => 0L
-          case 1 => out(k - 1).toLong
-          case 2 => 2L * out(k - 1) - out(k - 2)
-          case 3 => 3L * out(k - 1) - 3L * out(k - 2) + out(k - 3)
-          case _ => 4L * out(k - 1) - 6L * out(k - 2) + 4L * out(k - 3) - out(k - 4)
-        }
-        out(k) = (out(k) + pred).toInt
-        k += 1
-      }
-    } else if (typ >= 32) { // LPC, order = typ - 31
-      val order = typ - 31
-      if (order > n) throw new java.io.EOFException
-      var k = 0
-      while (k < order) { out(k) = bits.readSigned(bps); k += 1 }
-      val prec = bits.read(4) + 1
-      if (prec == 16) throw new java.io.EOFException // 0b1111 is reserved
-      val shift = bits.readSigned(5)
-      if (shift < 0) throw new java.io.EOFException
-      val coefs = new Array[Int](order)
-      k = 0
-      while (k < order) { coefs(k) = bits.readSigned(prec); k += 1 }
-      flacResidual(bits, n, order, out)
-      k = order
-      while (k < n) {
-        var sum = 0L
-        var j = 0
-        while (j < order) { sum += coefs(j).toLong * out(k - 1 - j); j += 1 }
-        out(k) = (out(k) + (sum >> shift)).toInt
-        k += 1
-      }
-    } else throw new java.io.EOFException // reserved subframe types
-    if (wasted > 0) {
-      var k = 0
-      while (k < n) { out(k) = out(k) << wasted; k += 1 }
-    }
-    out
-  }
-
-  /** REAL FLAC decode — RFC 9639 (the public IETF spec of the xiph
-    * format) implemented from scratch: "fLaC" metadata walk (STREAMINFO
-    * rate/channels/bps/total), then sequential frame decode — sync word,
-    * block-size/rate/channel/sample-size codes, UTF-8-coded frame number,
-    * per-channel subframes ([[flacSubframe]]: CONSTANT/VERBATIM/FIXED/LPC
-    * with rice-partitioned residuals), stereo decorrelation (left-side /
-    * right-side / mid-side with the side channel's +1 bit), wasted-bits
-    * restore. Header CRC-8/frame CRC-16 bytes are walked but not
-    * verified — on untrusted bytes a bad CRC and a truncated tail get the
-    * same treatment: the decoded prefix answers. Returns
-    * (sampleRate, decodedFrames, 16 window RMS energies) in exactly the
-    * WAV tier's shape. Decode is capped at 16M samples. */
-  private[graft] def decodeFlacRms(b: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-    try {
-      if (b == null || b.length < 42 ||
-          !(b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C')) return None
-      var i = 4L
-      var rate = 0; var chans = 0; var bps = 0
-      var last = false
-      while (!last && i + 4 <= b.length) {
-        val hdr = b(i.toInt) & 0xff
-        last = (hdr & 0x80) != 0
-        val typ = hdr & 0x7f
-        val len = ((b((i + 1).toInt) & 0xff) << 16) |
-          ((b((i + 2).toInt) & 0xff) << 8) | (b((i + 3).toInt) & 0xff)
-        if (typ == 0 && len >= 34 && i + 4 + 34 <= b.length) {
-          val p = (i + 4).toInt
-          rate = ((b(p + 10) & 0xff) << 12) | ((b(p + 11) & 0xff) << 4) |
-            ((b(p + 12) & 0xff) >> 4)
-          chans = ((b(p + 12) >> 1) & 7) + 1
-          bps = (((b(p + 12) & 1) << 4) | ((b(p + 13) & 0xff) >> 4)) + 1
-        }
-        i += 4 + len
-      }
-      if (rate <= 0 || chans <= 0 || chans > 8 || bps < 4 || i > b.length)
-        return None
-      val bits = new FlacBits(b, i * 8)
-      val samples = new scala.collection.mutable.ArrayBuilder.ofDouble
-      var nFrames = 0L
-      val maxSamples = 16L << 20
-      var decoding = true
-      while (decoding && nFrames * chans < maxSamples) {
-        try {
-          bits.alignByte()
-          if (bits.remaining < 40) decoding = false
-          else if (bits.read(14) != 0x3ffe) decoding = false
-          else {
-            bits.read(2) // reserved + blocking strategy
-            val bsCode = bits.read(4)
-            val srCode = bits.read(4)
-            val chAsgn = bits.read(4)
-            val ssCode = bits.read(3)
-            bits.read(1) // reserved
-            // UTF-8-style coded frame/sample number: lead byte names the
-            // continuation count
-            val b0 = bits.read(8)
-            if ((b0 & 0x80) != 0) {
-              var mask = 0x40; var extra = 0
-              while ((b0 & mask) != 0) { extra += 1; mask >>= 1 }
-              if (extra < 1 || extra > 6) throw new java.io.EOFException
-              var e = 0
-              while (e < extra) { bits.read(8); e += 1 }
-            }
-            val blockSize = bsCode match {
-              case 0 => throw new java.io.EOFException // reserved
-              case 1 => 192
-              case 6 => bits.read(8) + 1
-              case 7 => bits.read(16) + 1
-              case c if c <= 5 => 576 << (c - 2)
-              case c => 256 << (c - 8)
-            }
-            srCode match {
-              case 12 => bits.read(8)
-              case 13 | 14 => bits.read(16)
-              case 15 => throw new java.io.EOFException
-              case _ => ()
-            }
-            bits.read(8) // header CRC-8 (walked, not verified)
-            val frameBps = ssCode match {
-              case 0 => bps
-              case 1 => 8
-              case 2 => 12
-              case 4 => 16
-              case 5 => 20
-              case 6 => 24
-              case 7 => 32
-              case _ => throw new java.io.EOFException
-            }
-            if (chAsgn > 10) throw new java.io.EOFException
-            val nCh = if (chAsgn < 8) chAsgn + 1 else 2
-            val chData = new Array[Array[Int]](nCh)
-            var c = 0
-            while (c < nCh) {
-              val side = chAsgn match {
-                case 8 => c == 1 // left/side
-                case 9 => c == 0 // side/right
-                case 10 => c == 1 // mid/side
-                case _ => false
-              }
-              chData(c) = flacSubframe(bits, blockSize,
-                frameBps + (if (side) 1 else 0))
-              c += 1
-            }
-            bits.alignByte()
-            bits.read(16) // frame CRC-16 (walked, not verified)
-            var k = 0
-            chAsgn match {
-              case 8 => // side = L - R  =>  R = L - side
-                while (k < blockSize) {
-                  chData(1)(k) = chData(0)(k) - chData(1)(k); k += 1
-                }
-              case 9 => // side first, then R  =>  L = R + side
-                while (k < blockSize) {
-                  chData(0)(k) = chData(1)(k) + chData(0)(k); k += 1
-                }
-              case 10 => // mid/side with the spec's LSB-restore
-                while (k < blockSize) {
-                  val side = chData(1)(k)
-                  var mid = chData(0)(k) << 1
-                  mid |= (side & 1)
-                  chData(0)(k) = (mid + side) >> 1
-                  chData(1)(k) = (mid - side) >> 1
-                  k += 1
-                }
-              case _ => ()
-            }
-            val scale = 1.0 / (1L << (frameBps - 1)).toDouble
-            k = 0
-            while (k < blockSize) {
-              c = 0
-              while (c < nCh) { samples += chData(c)(k) * scale; c += 1 }
-              k += 1
-            }
-            nFrames += blockSize
-          }
-        } catch {
-          case _: Exception => decoding = false // truncated/corrupt tail
-        }
-      }
-      val all = samples.result()
-      if (nFrames <= 0 || all.isEmpty) return None
-      val perFrame = all.length / nFrames.toInt
-      val feat = new Array[Float](16)
-      var win = 0
-      while (win < 16) {
-        val s0 = (win.toLong * nFrames / 16).toInt * perFrame
-        val s1 = ((win + 1).toLong * nFrames / 16).toInt * perFrame
-        var sum = 0.0; var n = 0L; var s = s0
-        while (s < s1) { sum += all(s) * all(s); n += 1; s += 1 }
-        feat(win) = if (n == 0) -0.5f else (math.sqrt(sum / n) - 0.5).toFloat
-        win += 1
-      }
-      Some((rate, nFrames.toInt, feat))
-    } catch { case _: Exception => None }
-  }
-
-  /** REAL MP3 metadata walk — the MPEG-1/2/2.5 audio frame header per the
-    * public ISO 11172-3 / 13818-3 layout: skips a leading ID3v2 tag
-    * (syncsafe length), then walks sync-worded frames accumulating the
-    * per-frame sample count (Layer I = 384, Layer II = 1152, Layer III =
-    * 1152 for MPEG-1 / 576 for MPEG-2/2.5) and advancing by the computed
-    * frame length. Returns (sampleRate, totalSamples, channels); None when
-    * the bytes don't start a parseable MP3 stream. Free-format frames
-    * (bitrate index 0) and invalid indices end the walk — the already-
-    * counted prefix is the answer for a truncated store. */
-  private[graft] def probeMp3(b: Array[Byte]): Option[(Int, Int, Int)] = {
-    try {
-      if (b == null || b.length < 4) return None
-      var i = 0L
-      // ID3v2: "ID3" vv flags + 4 syncsafe size bytes
-      if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-        val sz = ((b(6) & 0x7f) << 21) | ((b(7) & 0x7f) << 14) |
-          ((b(8) & 0x7f) << 7) | (b(9) & 0x7f)
-        i = 10L + sz
-      }
-      // bitrate tables (kbps): [layer][index], one set per version group
-      val brV1 = Array(
-        Array(0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448), // L1
-        Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),    // L2
-        Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320))     // L3
-      val brV2 = Array(
-        Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256),    // L1
-        Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),         // L2
-        Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160))         // L3
-      val rates = Map(3 -> Array(44100, 48000, 32000), // MPEG-1
-        2 -> Array(22050, 24000, 16000),               // MPEG-2
-        0 -> Array(11025, 12000, 8000))                // MPEG-2.5
-      var sampleRate = 0; var channels = 0
-      var total = 0L; var frames = 0
-      while (i + 4 <= b.length && frames < 1000000) {
-        if ((b(i.toInt) & 0xff) != 0xff || (b((i + 1).toInt) & 0xe0) != 0xe0)
-          return finishMp3(sampleRate, total, channels)
-        val h1 = b((i + 1).toInt) & 0xff
-        val h2 = b((i + 2).toInt) & 0xff
-        val h3 = b((i + 3).toInt) & 0xff
-        val verBits = (h1 >> 3) & 3    // 0=2.5, 1=reserved, 2=MPEG-2, 3=MPEG-1
-        val layerBits = (h1 >> 1) & 3  // 1=III, 2=II, 3=I
-        val brIdx = (h2 >> 4) & 0xf
-        val srIdx = (h2 >> 2) & 3
-        if (verBits == 1 || layerBits == 0 || brIdx == 0 || brIdx == 15 ||
-            srIdx == 3) return finishMp3(sampleRate, total, channels)
-        val layer = 3 - layerBits // 0=I, 1=II, 2=III
-        val sr = rates(verBits)(srIdx)
-        val kbps = (if (verBits == 3) brV1 else brV2)(layer)(brIdx)
-        val padding = (h2 >> 1) & 1
-        val mono = ((h3 >> 6) & 3) == 3
-        val samples =
-          if (layer == 0) 384
-          else if (layer == 1) 1152
-          else if (verBits == 3) 1152 else 576
-        val frameLen =
-          if (layer == 0) (12 * kbps * 1000 / sr + padding) * 4
-          else samples / 8 * kbps * 1000 / sr + padding
-        if (frameLen <= 4) return finishMp3(sampleRate, total, channels)
-        if (sampleRate == 0) { sampleRate = sr; channels = if (mono) 1 else 2 }
-        // a PARTIAL final frame (truncated store) still counts: its header
-        // declares the samples even when the payload tail is cut off
-        total += samples; frames += 1
-        i += frameLen
-      }
-      finishMp3(sampleRate, total, channels)
-    } catch { case _: Exception => None }
-  }
-
-  private def finishMp3(rate: Int, total: Long, ch: Int): Option[(Int, Int, Int)] =
-    if (rate <= 0 || total <= 0) None
-    else Some((rate, math.min(total, Int.MaxValue.toLong).toInt, ch))
-
-  /** REAL Ogg metadata walk — RFC 3533 page framing plus the public Vorbis
-    * and Opus identification headers: the first "OggS" page's first packet
-    * names the codec (\x01vorbis → channels@11, rate u32le@12;
-    * OpusHead → channels@9, pre-skip u16le@10, granule clock 48 kHz), and
-    * the LAST page's granule position is the stream's total PCM sample
-    * count (Opus: minus pre-skip). Returns (sampleRate, totalSamples,
-    * channels); a truncated store reports the last visible page's
-    * granule. */
-  private[graft] def probeOgg(b: Array[Byte]): Option[(Int, Int, Int)] = {
-    try {
-      if (b == null || b.length < 58) return None
-      if (!(b(0) == 'O' && b(1) == 'g' && b(2) == 'g' && b(3) == 'S')) return None
-      var rate = 0; var channels = 0; var preSkip = 0
-      var lastGranule = 0L
-      var sawId = false
-      var i = 0L
-      while (i + 27 <= b.length) {
-        if (!(b(i.toInt) == 'O' && b((i + 1).toInt) == 'g' &&
-              b((i + 2).toInt) == 'g' && b((i + 3).toInt) == 'S' &&
-              b((i + 4).toInt) == 0)) return finishOgg(rate, lastGranule, preSkip, channels)
-        var gran = 0L
-        var k = 0
-        while (k < 8) { // u64le granule position
-          gran |= (b((i + 6 + k).toInt).toLong & 0xff) << (8 * k)
-          k += 1
-        }
-        val nsegs = b((i + 26).toInt) & 0xff
-        if (i + 27 + nsegs > b.length) return finishOgg(rate, lastGranule, preSkip, channels)
-        var bodyLen = 0
-        k = 0
-        while (k < nsegs) { bodyLen += b((i + 27 + k).toInt) & 0xff; k += 1 }
-        val body = i + 27 + nsegs
-        // -1 granule = page contains no packet end; don't regress the count
-        if (gran >= 0) lastGranule = math.max(lastGranule, gran)
-        if (!sawId && body + 19 <= b.length) {
-          val p = body.toInt
-          if ((b(p) & 0xff) == 1 && b(p + 1) == 'v' && b(p + 2) == 'o' &&
-              b(p + 3) == 'r' && b(p + 4) == 'b' && b(p + 5) == 'i' &&
-              b(p + 6) == 's' && body + 16 <= b.length) {
-            channels = b(p + 11) & 0xff
-            rate = u32le(b, p + 12)
-            sawId = true
-          } else if (b(p) == 'O' && b(p + 1) == 'p' && b(p + 2) == 'u' &&
-              b(p + 3) == 's' && b(p + 4) == 'H' && b(p + 5) == 'e' &&
-              b(p + 6) == 'a' && b(p + 7) == 'd') {
-            channels = b(p + 9) & 0xff
-            preSkip = u16le(b, p + 10)
-            rate = 48000 // Opus granules tick at 48 kHz regardless of input
-            sawId = true
-          }
-        }
-        if (body + bodyLen > b.length) return finishOgg(rate, lastGranule, preSkip, channels)
-        i = body + bodyLen
-      }
-      finishOgg(rate, lastGranule, preSkip, channels)
-    } catch { case _: Exception => None }
-  }
-
-  private def finishOgg(rate: Int, granule: Long, preSkip: Int,
-                        ch: Int): Option[(Int, Int, Int)] =
-    if (rate <= 0 || ch <= 0) None
-    else {
-      val total = math.max(0L, granule - preSkip)
-      Some((rate, math.min(total, Int.MaxValue.toLong).toInt, ch))
-    }
-
-  /** REAL BMP decode — the Windows DIB formats per the public file-format
-    * documentation: BITMAPCOREHEADER (12-byte, u16 dims, BGR triples) and
-    * BITMAPINFOHEADER-or-later (s32 dims, negative height = top-down,
-    * BGRA palette quads), bit depths 1/4/8 (palette), 16 (RGB555 or
-    * BITFIELDS masks), 24 (BGR) and 32 (BGRx or BITFIELDS), compressions
-    * BI_RGB, BI_RLE8, BI_RLE4 (run + absolute mode + delta/EOL/EOB
-    * escapes) and BI_BITFIELDS. Rows are 4-byte aligned; bottom-up unless
-    * top-down. Returns (w, h, channels, luma). Untrusted geometry: the
-    * same Long-arithmetic and allocation caps as the other byte walks;
-    * corrupt bytes → None (fold tier), never a throw. */
-  private[graft] def decodeBmpLuma(b: Array[Byte]): Option[(Int, Int, Int, Array[Float])] = {
-    try {
-      if (b == null || b.length < 26 || b(0) != 'B' || b(1) != 'M') return None
-      val dataOff = u32le(b, 10)
-      val dibSize = u32le(b, 14)
-      var w = 0; var hRaw = 0; var bpp = 0; var comp = 0
-      var palOff = 0; var palStride = 4; var palCount = 0
-      if (dibSize == 12) { // BITMAPCOREHEADER: u16 dims, BGR palette triples
-        if (b.length < 26) return None
-        w = u16le(b, 18); hRaw = u16le(b, 20)
-        bpp = u16le(b, 24)
-        palOff = 14 + 12; palStride = 3
-        palCount = if (bpp <= 8) 1 << bpp else 0
-      } else if (dibSize >= 40) { // BITMAPINFOHEADER and successors
-        if (b.length < 54) return None
-        w = u32le(b, 18); hRaw = u32le(b, 22)
-        bpp = u16le(b, 28); comp = u32le(b, 30)
-        palCount = if (b.length >= 50) u32le(b, 46) else 0
-        if (palCount == 0 && bpp <= 8) palCount = 1 << bpp
-        palOff = 14 + dibSize
-        // BI_BITFIELDS with a 40-byte header: 3 mask dwords FOLLOW it
-        if (comp == 3 && dibSize == 40) palOff += 12
-      } else return None
-      val topDown = hRaw < 0
-      val h = if (topDown) -hRaw else hRaw
-      if (w <= 0 || h <= 0 || w.toLong * h > (16L << 20)) return None
-      if (!Set(1, 4, 8, 16, 24, 32).contains(bpp)) return None
-      if (comp != 0 && comp != 1 && comp != 2 && comp != 3) return None
-      if ((comp == 1 && bpp != 8) || (comp == 2 && bpp != 4)) return None
-      if (comp == 3 && bpp != 16 && bpp != 32) return None
-      if (dataOff < 0 || dataOff > b.length) return None
-
-      // palette luma lookup for the indexed depths
-      var palLuma: Array[Float] = null
-      if (bpp <= 8) {
-        if (palCount <= 0 || palCount > 256) return None
-        if (palOff.toLong + palStride.toLong * palCount > b.length) return None
-        palLuma = Array.tabulate(palCount) { k =>
-          val p = palOff + k * palStride // BGR(A) order
-          0.299f * (b(p + 2) & 0xff) + 0.587f * (b(p + 1) & 0xff) +
-            0.114f * (b(p) & 0xff)
-        }
-      }
-      // BITFIELDS masks (or the RGB555/BGRx defaults)
-      var mr = 0; var mg = 0; var mb = 0
-      if (bpp == 16 || bpp == 32) {
-        if (comp == 3) {
-          // masks sit at byte 54 either way: appended after a 40-byte
-          // INFOHEADER, or as the leading v4+ header fields
-          val mOff = 14 + 40
-          if (mOff + 12 > b.length) return None
-          mr = u32le(b, mOff); mg = u32le(b, mOff + 4); mb = u32le(b, mOff + 8)
-        } else if (bpp == 16) { mr = 0x7c00; mg = 0x03e0; mb = 0x001f }
-        else { mr = 0xff0000; mg = 0x00ff00; mb = 0x0000ff }
-        if (mr == 0 || mg == 0 || mb == 0) return None
-      }
-      def maskVal(v: Int, mask: Int): Int = {
-        // extract the masked channel and scale it to 8 bits
-        var m = mask; var shift = 0
-        while ((m & 1) == 0) { m >>>= 1; shift += 1 }
-        var bits = 0; var mm = m
-        while (mm != 0) { bits += 1; mm >>>= 1 }
-        val raw = (v >>> shift) & m
-        if (bits >= 8) raw >> (bits - 8) else (raw * 255) / ((1 << bits) - 1)
-      }
-      val luma = new Array[Float](w * h)
-      def rowBase(y: Int): Int = (if (topDown) y else h - 1 - y) * w
-
-      if (comp == 1 || comp == 2) {
-        // BI_RLE8 / BI_RLE4: escapes 00 00 = EOL, 00 01 = end, 00 02 = delta
-        var i = dataOff.toLong
-        var x = 0; var line = 0 // line counts BOTTOM-UP rows as stored
-        while (i + 1 < b.length && line < h) {
-          val n = b(i.toInt) & 0xff; val v = b((i + 1).toInt) & 0xff
-          i += 2
-          if (n > 0) { // run: n pixels of v (RLE4: two alternating nibbles)
-            var k = 0
-            while (k < n && x < w) {
-              val idx =
-                if (comp == 1) v
-                else if ((k & 1) == 0) (v >> 4) & 0xf
-                else v & 0xf
-              if (idx < palLuma.length) {
-                val y = if (topDown) line else h - 1 - line
-                if (y >= 0 && y < h) luma(y * w + x) = palLuma(idx)
-              }
-              x += 1; k += 1
-            }
-          } else v match {
-            case 0 => x = 0; line += 1 // end of line
-            case 1 => line = h // end of bitmap
-            case 2 => // delta: move cursor right/up
-              if (i + 1 >= b.length) { line = h }
-              else {
-                x += b(i.toInt) & 0xff; line += b((i + 1).toInt) & 0xff; i += 2
-              }
-            case cnt => // absolute mode: cnt literal pixels, word-aligned
-              val bytes = if (comp == 1) cnt else (cnt + 1) / 2
-              val padded = (bytes + 1) & ~1
-              var k = 0
-              while (k < cnt && x < w && i + (if (comp == 1) k else k / 2) < b.length) {
-                val byteV = b((i + (if (comp == 1) k else k / 2)).toInt) & 0xff
-                val idx =
-                  if (comp == 1) byteV
-                  else if ((k & 1) == 0) (byteV >> 4) & 0xf
-                  else byteV & 0xf
-                if (idx < palLuma.length) {
-                  val y = if (topDown) line else h - 1 - line
-                  if (y >= 0 && y < h) luma(y * w + x) = palLuma(idx)
-                }
-                x += 1; k += 1
-              }
-              i += padded
-          }
-        }
-      } else {
-        // uncompressed (or BITFIELDS): 4-byte-aligned rows
-        val rowBytes = ((w.toLong * bpp + 31) / 32 * 4)
-        var y = 0
-        while (y < h) {
-          val base = dataOff.toLong + y * rowBytes
-          if (base + rowBytes > b.length) {
-            // truncated pixel data: accept the decoded prefix only if at
-            // least one full row landed, else reject to the fold tier
-            if (y == 0) return None
-            y = h
-          } else {
-            val out = rowBase(y)
-            var x = 0
-            while (x < w) {
-              luma(out + x) = bpp match {
-                case 1 =>
-                  val bit = (b((base + (x >> 3)).toInt) >> (7 - (x & 7))) & 1
-                  palLuma(math.min(bit, palLuma.length - 1))
-                case 4 =>
-                  val nib = (b((base + (x >> 1)).toInt) >> (if ((x & 1) == 0) 4 else 0)) & 0xf
-                  palLuma(math.min(nib, palLuma.length - 1))
-                case 8 =>
-                  palLuma(math.min(b((base + x).toInt) & 0xff, palLuma.length - 1))
-                case 16 =>
-                  val v = u16le(b, (base + x * 2).toInt)
-                  0.299f * maskVal(v, mr) + 0.587f * maskVal(v, mg) +
-                    0.114f * maskVal(v, mb)
-                case 24 =>
-                  val p = (base + x * 3).toInt // BGR
-                  0.299f * (b(p + 2) & 0xff) + 0.587f * (b(p + 1) & 0xff) +
-                    0.114f * (b(p) & 0xff)
-                case _ =>
-                  val v = u32le(b, (base + x * 4).toInt)
-                  0.299f * maskVal(v, mr) + 0.587f * maskVal(v, mg) +
-                    0.114f * maskVal(v, mb)
-              }
-              x += 1
-            }
-            y += 1
-          }
-        }
-      }
-      val channels = if (bpp == 32) 4 else 3
-      Some((w, h, channels, luma))
-    } catch { case _: Exception => None }
-  }
-
-  /** 4x4 grid mean-pool of a luminance image → the 16-dim feature,
-    * normalized to [-0.5, 0.5] (0 = black, 1 = white before the shift).
-    * Cell boundaries partition rows/cols evenly (ceil-split), so every
-    * pixel lands in exactly one cell. */
-  private[graft] def gridPool16(w: Int, h: Int, luma: Array[Float]): Array[Float] = {
-    val sums = new Array[Double](16)
-    val counts = new Array[Long](16)
-    var y = 0
-    while (y < h) {
-      val gy = math.min(3, y * 4 / h)
-      var x = 0
-      while (x < w) {
-        val cell = gy * 4 + math.min(3, x * 4 / w)
-        sums(cell) += luma(y * w + x)
-        counts(cell) += 1
-        x += 1
-      }
-      y += 1
-    }
-    Array.tabulate(16)(k =>
-      if (counts(k) == 0) 0.0f
-      else (sums(k) / counts(k) / 255.0).toFloat - 0.5f)
-  }
-
-  /** G.711 µ-law byte → linear sample on the 16-bit scale (public CCITT
-    * segmented-companding formula). */
-  private def ulaw2linear(code: Int): Int = {
-    val u = ~code & 0xff
-    val t = (((u & 0x0f) << 3) + 0x84) << ((u & 0x70) >> 4)
-    if ((u & 0x80) != 0) 0x84 - t else t - 0x84
-  }
-
-  /** G.711 A-law byte → linear sample on the 16-bit scale. */
-  private def alaw2linear(code: Int): Int = {
-    val a = code ^ 0x55
-    val seg = (a & 0x70) >> 4
-    var t = (a & 0x0f) << 4
-    if (seg == 0) t += 8
-    else { t += 0x108; if (seg > 1) t <<= seg - 1 }
-    if ((a & 0x80) != 0) t else -t
-  }
-
-  /** MS-ADPCM standard coefficient pairs and adaptation table (public
-    * Microsoft Multimedia Standards Update spec). Files may carry extra
-    * pairs in the fmt chunk; the first 7 are fixed by the spec. */
-  private val msCoef1: Array[Int] = Array(256, 512, 0, 192, 240, 460, 392)
-  private val msCoef2: Array[Int] = Array(0, -256, 0, 64, 0, -208, -232)
-  private val msAdapt: Array[Int] = Array(
-    230, 230, 230, 230, 307, 409, 512, 614,
-    768, 614, 512, 409, 307, 230, 230, 230)
-
-  /** IMA ADPCM step-size table and index adjustments (public IMA spec). */
-  private val imaStep: Array[Int] = Array(
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 600, 660,
-    726, 794, 873, 961, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767)
-  private val imaIndexAdj: Array[Int] = Array(-1, -1, -1, -1, 2, 4, 6, 8)
-
-  /** REAL WAV sample decode → 16 per-window RMS energies. Supports PCM
-    * (format 1) at 8-bit unsigned / 16/24/32-bit signed LE, IEEE float32
-    * (format 3), MS-ADPCM (format 2, per-block coefficient predictors),
-    * G.711 A-law/µ-law (formats 6/7), IMA ADPCM (format
-    * 0x11, block-structured 4-bit), and WAVE_FORMAT_EXTENSIBLE (0xFFFE)
-    * wrapping any of these; any channel count ≤ 16 (channels are
-    * energy-averaged together). The window RMS is normalized to full
-    * scale and shifted to [-0.5, 0.5] (silence → -0.5). Returns
-    * (sampleRate, nFrames, feature) or None for other codecs. */
-  private[graft] def decodeWavRms(b: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-    if (b == null || b.length < 44 || b(0) != 'R' || b(1) != 'I' || b(2) != 'F' ||
-        b(3) != 'F' || b(8) != 'W' || b(9) != 'A' || b(10) != 'V' || b(11) != 'E')
-      return None
-    try {
-    var i = 12
-    var rate = 0; var bits = 0; var chans = 0; var fmt = 0
-    var blockAlign = 0; var fmtBody = -1; var fmtLen = 0
-    var dataOff = -1; var dataLen = 0
-    while (i + 8 <= b.length) {
-      val id = new String(b, i, 4, "US-ASCII")
-      val len = u32le(b, i + 4)
-      // Long arithmetic: len near Int.MaxValue must not overflow the check
-      // and wrap the cursor negative (one corrupt record would kill the task).
-      if (len < 0 || i.toLong + 8 + len > b.length) return None
-      if (id == "fmt " && len >= 16) {
-        fmt = u16le(b, i + 8); chans = u16le(b, i + 10)
-        rate = u32le(b, i + 12); blockAlign = u16le(b, i + 20)
-        bits = u16le(b, i + 22)
-        fmtBody = i + 8; fmtLen = len
-      }
-      if (id == "data") { dataOff = i + 8; dataLen = len }
-      i += 8 + len + (len & 1)
-    }
-    if (rate <= 0 || chans <= 0 || chans > 16 || dataOff < 0) return None
-    // WAVE_FORMAT_EXTENSIBLE: the real code is the SubFormat GUID's
-    // leading 16 bits (the rest of the GUID is the fixed media namespace)
-    val code = if (fmt == 0xfffe && fmtLen >= 40) u16le(b, fmtBody + 24) else fmt
-
-    def rmsWindows(nFrames: Int, sampleAt: (Int, Int) => Double): Array[Float] = {
-      val feat = new Array[Float](16)
-      var win = 0
-      while (win < 16) {
-        val f0 = (win.toLong * nFrames / 16).toInt
-        val f1 = ((win + 1).toLong * nFrames / 16).toInt
-        var sum = 0.0
-        var n = 0L
-        var f = f0
-        while (f < f1) {
-          var c = 0
-          while (c < chans) {
-            val v = sampleAt(f, c)
-            sum += v * v; n += 1
-            c += 1
-          }
-          f += 1
-        }
-        feat(win) = if (n == 0) -0.5f else (math.sqrt(sum / n) - 0.5).toFloat
-        win += 1
-      }
-      feat
-    }
-
-    code match {
-      case 1 | 3 | 6 | 7 => // frame-addressable: fixed bytes per sample
-        val bytesPer = code match {
-          case 6 | 7 => if (bits != 8) return None else 1
-          case 3     => if (bits != 32) return None else 4
-          case _     =>
-            if (bits != 8 && bits != 16 && bits != 24 && bits != 32) return None
-            bits / 8
-        }
-        val bytesPerFrame = bytesPer * chans
-        val nFrames = dataLen / bytesPerFrame
-        if (nFrames == 0) return Some((rate, 0, Array.fill(16)(-0.5f)))
-        def sampleAt(f: Int, c: Int): Double = {
-          val o = dataOff + f * bytesPerFrame + c * bytesPer
-          code match {
-            case 6 => alaw2linear(b(o) & 0xff) / 32768.0
-            case 7 => ulaw2linear(b(o) & 0xff) / 32768.0
-            case 3 =>
-              val v = java.lang.Float.intBitsToFloat(u32le(b, o)).toDouble
-              math.max(-1.0, math.min(1.0, if (v.isNaN) 0.0 else v))
-            case _ => bytesPer match {
-              case 1 => ((b(o) & 0xff) - 128).toDouble / 128.0
-              case 2 => u16le(b, o).toShort.toDouble / 32768.0
-              case 3 => ((b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-                         (b(o + 2).toInt << 16)).toDouble / 8388608.0
-              case _ => u32le(b, o).toDouble / 2147483648.0
-            }
-          }
-        }
-        Some((rate, nFrames, rmsWindows(nFrames, sampleAt)))
-
-      case 0x11 => // IMA ADPCM: per-block channel headers + nibble groups
-        if (bits != 4 || blockAlign < 4 * chans + 4 || blockAlign > dataLen)
-          return None
-        val spb = (blockAlign - 4 * chans) * 2 / chans + 1 // samples/blk/chan
-        val nBlocks = dataLen / blockAlign
-        val nFrames = nBlocks * spb
-        if (nFrames == 0) return Some((rate, 0, Array.fill(16)(-0.5f)))
-        if (nFrames.toLong * chans > 16L * 1024 * 1024) return None
-        val dec = new Array[Float](nFrames * chans)
-        var blk = 0
-        while (blk < nBlocks) {
-          val base = dataOff + blk * blockAlign
-          val pred = new Array[Int](chans); val idx = new Array[Int](chans)
-          var c = 0
-          while (c < chans) { // 4-byte header: predictor s16, step index u8
-            pred(c) = u16le(b, base + 4 * c).toShort.toInt
-            idx(c) = math.min(88, b(base + 4 * c + 2) & 0xff)
-            dec(blk * spb * chans + c) = pred(c) / 32768.0f
-            c += 1
-          }
-          // nibble data in 4-byte-per-channel groups (8 samples each)
-          var s = 1
-          var p = base + 4 * chans
-          while (s < spb) {
-            var c2 = 0
-            while (c2 < chans) {
-              var g = 0
-              while (g < 8 && s + g < spb) {
-                val byte0 = b(p + c2 * 4 + g / 2) & 0xff
-                val n = if ((g & 1) == 0) byte0 & 0xf else (byte0 >> 4) & 0xf
-                val step = imaStep(idx(c2))
-                var diff = step >> 3
-                if ((n & 1) != 0) diff += step >> 2
-                if ((n & 2) != 0) diff += step >> 1
-                if ((n & 4) != 0) diff += step
-                if ((n & 8) != 0) pred(c2) -= diff else pred(c2) += diff
-                if (pred(c2) > 32767) pred(c2) = 32767
-                if (pred(c2) < -32768) pred(c2) = -32768
-                idx(c2) = math.min(88, math.max(0, idx(c2) + imaIndexAdj(n & 7)))
-                dec((blk * spb + s + g) * chans + c2) = pred(c2) / 32768.0f
-                g += 1
-              }
-              c2 += 1
-            }
-            s += 8
-            p += 4 * chans
-          }
-          blk += 1
-        }
-        Some((rate, nFrames, rmsWindows(nFrames, (f, c) => dec(f * chans + c))))
-
-      case 2 => // MS-ADPCM: per-block coef headers + signed 4-bit nibbles
-        if (bits != 4 || blockAlign < 7 * chans + 1 || blockAlign > dataLen)
-          return None
-        // fmt extras (wSamplesPerBlock @18, wNumCoef @20, pairs @22) are
-        // only present in the plain fmt-2 layout, not under EXTENSIBLE.
-        val hasExtra = fmt == 2 && fmtLen >= 22
-        val nCoef =
-          if (hasExtra) math.max(7, math.min(64, u16le(b, fmtBody + 20)))
-          else 7
-        val c1 = new Array[Int](nCoef); val c2 = new Array[Int](nCoef)
-        var ci = 0
-        while (ci < nCoef) {
-          if (ci < 7) { c1(ci) = msCoef1(ci); c2(ci) = msCoef2(ci) }
-          if (hasExtra && fmtLen >= 22 + 4 * (ci + 1)) {
-            c1(ci) = u16le(b, fmtBody + 22 + 4 * ci).toShort.toInt
-            c2(ci) = u16le(b, fmtBody + 24 + 4 * ci).toShort.toInt
-          }
-          ci += 1
-        }
-        val spb =
-          if (hasExtra && u16le(b, fmtBody + 18) > 0) u16le(b, fmtBody + 18)
-          else (blockAlign - 7 * chans) * 2 / chans + 2
-        if (spb < 2) return None
-        val nBlocks = dataLen / blockAlign
-        val nFrames = nBlocks * spb
-        if (nFrames == 0) return Some((rate, 0, Array.fill(16)(-0.5f)))
-        if (nFrames.toLong * chans > 16L * 1024 * 1024) return None
-        val dec = new Array[Float](nFrames * chans)
-        var blk = 0
-        while (blk < nBlocks) {
-          val base = dataOff + blk * blockAlign
-          // header, channel-interleaved: bPredictor u8 ×ch, iDelta s16 ×ch,
-          // iSamp1 s16 ×ch, iSamp2 s16 ×ch (7 bytes per channel total)
-          val coef = new Array[Int](chans); val delta = new Array[Int](chans)
-          val s1 = new Array[Int](chans); val s2 = new Array[Int](chans)
-          var c = 0
-          while (c < chans) {
-            coef(c) = math.min(nCoef - 1, b(base + c) & 0xff)
-            delta(c) = u16le(b, base + chans + 2 * c).toShort.toInt
-            if (delta(c) < 16) delta(c) = 16
-            s1(c) = u16le(b, base + 3 * chans + 2 * c).toShort.toInt
-            s2(c) = u16le(b, base + 5 * chans + 2 * c).toShort.toInt
-            // output order: iSamp2 is the OLDER sample, emitted first
-            dec((blk * spb) * chans + c) = s2(c) / 32768.0f
-            if (spb > 1) dec((blk * spb + 1) * chans + c) = s1(c) / 32768.0f
-            c += 1
-          }
-          // nibble data: samples interleaved across channels, two per
-          // byte, HIGH nibble first (opposite of IMA)
-          var s = 2
-          var nibAt = (base + 7 * chans) * 2 // nibble cursor (half-bytes)
-          val nibEnd = (base + blockAlign) * 2
-          while (s < spb && nibAt < nibEnd) {
-            var c3 = 0
-            while (c3 < chans && nibAt < nibEnd) {
-              val byte0 = b(nibAt >> 1) & 0xff
-              val nib = if ((nibAt & 1) == 0) (byte0 >> 4) & 0xf else byte0 & 0xf
-              nibAt += 1
-              // spec arithmetic: C-style truncating division by 256
-              val pred = (s1(c3) * c1(coef(c3)) + s2(c3) * c2(coef(c3))) / 256
-              val signed = if (nib >= 8) nib - 16 else nib
-              var v = pred + delta(c3) * signed
-              if (v > 32767) v = 32767
-              if (v < -32768) v = -32768
-              s2(c3) = s1(c3); s1(c3) = v
-              delta(c3) = delta(c3) * msAdapt(nib) / 256
-              if (delta(c3) < 16) delta(c3) = 16
-              dec((blk * spb + s) * chans + c3) = v / 32768.0f
-              c3 += 1
-            }
-            s += 1
-          }
-          blk += 1
-        }
-        Some((rate, nFrames, rmsWindows(nFrames, (f, c) => dec(f * chans + c))))
-
-      case _ => None // unsupported codec → header/fold tier
-    }
-    } catch { case _: Exception => None } // corrupt input → header/fold tier
-  }
-
-  /** REAL MJPEG-in-AVI video decode — the RIFF/AVI container is a public
-    * Microsoft spec and each frame chunk is a baseline JPEG, so the frame
-    * pixels come from [[decodeJpegLuma]] with no codec library: parses the
-    * `avih` main header (geometry + declared frame count), walks the
-    * nested LIST tree to the `movi` chunk run, and grid-pools every
-    * decoded video-stream chunk (`##dc`/`##db`). Untrusted-bytes rules
-    * match the other walks: Long cursor arithmetic (a crafted length can't
-    * wrap the cursor), a LIST depth limit (crafted nesting can't recurse
-    * unboundedly), and a `maxDecode` cap on frames actually decoded (a
-    * crafted header can't force unbounded pixel work) while the returned
-    * frame COUNT still reflects every chunk present. Returns
-    * (width, height, nFrames, per-frame 16-dim features — possibly empty
-    * when the embedded codec isn't baseline JPEG) or None when the bytes
-    * aren't RIFF AVI with a parseable header. */
-  private[graft] def decodeAviMjpeg(b: Array[Byte], maxDecode: Int = 64)
-      : Option[(Int, Int, Int, Array[Array[Float]])] = {
-    if (b == null || b.length < 24 || b(0) != 'R' || b(1) != 'I' ||
-        b(2) != 'F' || b(3) != 'F' || b(8) != 'A' || b(9) != 'V' ||
-        b(10) != 'I' || b(11) != ' ') return None
-    try {
-      var w = 0; var h = 0; var declared = 0
-      var chunkFrames = 0
-      val feats = scala.collection.mutable.ArrayBuffer[Array[Float]]()
-      def walk(from: Int, until: Int, depth: Int): Unit = {
-        var i = from
-        while (i + 8 <= until) {
-          val id = new String(b, i, 4, "US-ASCII")
-          val len = u32le(b, i + 4)
-          if (len < 0) return
-          val bodyEnd = math.min(until.toLong, i.toLong + 8 + len).toInt
-          if (id == "LIST" && depth < 4 && i + 12 <= until) {
-            walk(i + 12, bodyEnd, depth + 1) // skip the 4-byte list type
-          } else if (id == "avih" && i + 8 + 40 <= until) {
-            // avih body: dwMicroSecPerFrame @0 ... dwTotalFrames @16,
-            // dwWidth @32, dwHeight @36
-            declared = u32le(b, i + 8 + 16)
-            w = u32le(b, i + 8 + 32)
-            h = u32le(b, i + 8 + 36)
-          } else if (id(0).isDigit && id(1).isDigit &&
-                     (id.endsWith("dc") || id.endsWith("db"))) {
-            chunkFrames += 1
-            if (feats.length < maxDecode && i + 8 <= bodyEnd) {
-              val frame = java.util.Arrays.copyOfRange(b, i + 8, bodyEnd)
-              decodeJpegLuma(frame).foreach { case (fw, fh, _, luma) =>
-                feats += gridPool16(fw, fh, luma)
-              }
-            }
-          }
-          val next = i.toLong + 8 + len + (len & 1)
-          i = if (next > until) until else next.toInt
-        }
-      }
-      walk(12, b.length, 0)
-      if (w <= 0 || h <= 0) None
-      else Some((w, h, math.max(declared, chunkFrames), feats.toArray))
-    } catch { case _: Exception => None } // corrupt input → header/fold tier
-  }
-
-  /** Decode dispatch, best-real-first:
-    *  1. PNG → REAL pixel decode ([[decodePngLuma]]: inflate + unfilter)
-    *     with a 4x4 mean-pool luminance grid as the 16-dim feature;
-    *  2. baseline or progressive JPEG → REAL pixel decode
-    *     ([[decodeJpegLuma]] / [[decodeJpegProgressive]]: Huffman +
-    *     dequant + IDCT, multi-scan accumulation), same grid feature;
-    *  3. GIF (87a/89a, still or animated) → REAL pixel decode
-    *     ([[decodeGif]]: LZW + palette + interlace + GCE compositing);
-    *     still = grid of the frame, animated = mean of per-frame grids
-    *     with dim3 carrying the frame count;
-    *  3a. BMP (DIB: 1/4/8/16/24/32 bpp, BI_RGB/RLE8/RLE4/BITFIELDS) →
-    *     REAL pixel decode ([[decodeBmpLuma]]), same grid feature;
-    *  3c. TIFF (strips; none/LZW/PackBits; gray 1/4/8/16, RGB, palette)
-    *     → REAL pixel decode ([[decodeTiffLuma]]), same grid feature;
-    *  3b. MJPEG-in-AVI video → REAL frame decode ([[decodeAviMjpeg]]):
-    *     per-frame JPEG pixels, feature = mean of per-frame grids;
-    *  4. WAV (PCM 8/16/24/32, float32, G.711 A-law/µ-law, MS-ADPCM,
-    *     IMA ADPCM, extensible) → REAL sample decode ([[decodeWavRms]]:
-    *     16 window RMS energies);
-    *  5. recognized container but unsupported encoding (non-MJPEG AVI,
-    *     MP4/Matroska with a compressed codec payload, compressed-audio
-    *     WAV codecs like MP3-in-WAV, raw MP3, Ogg Vorbis/Opus) → REAL
-    *     header metadata ([[probeHeader]], incl. the [[probeMp4]] moov
-    *     walk, the [[probeMkv]] EBML walk, the [[probeMp3]] frame-header
-    *     walk and the [[probeOgg]] page walk) + the
-    *     deterministic fold feature;
-    *  6. unrecognized bytes → fully faked dims + fold feature.
-    *
-    * ============================ STUB ================================
-    * Only tier 5-6's FEATURE VECTOR is faked (a stable byte fold):
-    * compressed video PIXEL codecs (H.264/VP9 etc.) and perceptual-audio
-    * SAMPLE decode (MP3/Vorbis/Opus payloads) are out of scope to write
-    * from scratch in this container. PNG pixels (every depth and
-    * interlace mode), baseline AND progressive JPEG pixels, GIF frames
-    * (still + animated), BMP pixels, MJPEG-AVI frames, WAV samples
-    * (every realistic codec) and FLAC samples are all decoded for real
-    * above; MP4/Matroska geometry/frame counts and MP3/Ogg sample
-    * rates/durations parse for real; swapping in further codecs extends
-    * the dispatch.
+  /** ============================ STUB ================================
+    * Deterministic fake decode: a 64-bit polynomial (FNV-ish) fold of the
+    * bytes gives the 16-dim feature (8-bit slices of the fold scaled to
+    * [-0.5, 0.5)); the dims are faked from the same fold — 64..1087 for
+    * dim1/dim2 and 3 channels (image), 1 channel (audio) or 24 frames
+    * (video) for dim3. Total on any input: null bytes fold as empty, and
+    * every dim is non-negative.
     * ================================================================== */
   def decodeStub(mediaType: String, bytes: Array[Byte]): (Int, Int, Int, Array[Float]) = {
     val b = if (bytes == null) Array.empty[Byte] else bytes
-    decodePngLuma(b) match {
-      case Some((w, h, ch, luma)) => return (w, h, ch, gridPool16(w, h, luma))
-      case None => ()
-    }
-    decodeJpegLuma(b) match {
-      case Some((w, h, ch, luma)) => return (w, h, ch, gridPool16(w, h, luma))
-      case None => ()
-    }
-    decodeGif(b) match {
-      // still GIF: dims carry channels like the other image tiers;
-      // animated GIF: dim3 carries the frame count and the feature is the
-      // mean of per-frame grids, mirroring the MJPEG-AVI tier
-      case Some((w, h, 1, grids, _)) => return (w, h, 3, grids(0))
-      case Some((w, h, n, grids, _)) if grids.nonEmpty =>
-        val mean = Array.tabulate(16) { k =>
-          var s = 0.0; var j = 0
-          while (j < grids.length) { s += grids(j)(k); j += 1 }
-          (s / grids.length).toFloat
-        }
-        return (w, h, n, mean)
-      case _ => ()
-    }
-    decodeBmpLuma(b) match {
-      case Some((w, h, ch, luma)) => return (w, h, ch, gridPool16(w, h, luma))
-      case None => ()
-    }
-    decodeTiffLuma(b) match {
-      case Some((w, h, ch, luma)) => return (w, h, ch, gridPool16(w, h, luma))
-      case None => ()
-    }
-    decodeAviMjpeg(b) match {
-      case Some((w, h, n, frames)) if frames.nonEmpty =>
-        val mean = Array.tabulate(16) { k =>
-          var s = 0.0; var j = 0
-          while (j < frames.length) { s += frames(j)(k); j += 1 }
-          (s / frames.length).toFloat
-        }
-        return (w, h, n, mean)
-      case _ => () // non-MJPEG AVI → header/fold tier below
-    }
-    decodeWavRms(b) match {
-      case Some((rate, frames, feat)) => return (rate, frames, 1, feat)
-      case None => ()
-    }
-    decodeFlacRms(b) match {
-      case Some((rate, frames, feat)) => return (rate, frames, 1, feat)
-      case None => ()
-    }
     var h = 1125899906842597L // deterministic FNV-ish fold of the bytes
     var i = 0
     while (i < b.length) { h = 31 * h + b(i); i += 1 }
     val feat = Array.tabulate(16) { k =>
       (((h >> (k * 3)) & 0xffL).toFloat / 255.0f) - 0.5f
     }
-    probeHeader(mediaType, b) match {
-      case Some((d1, d2, d3)) => (d1, d2, d3, feat)
-      case None =>
-        val dim1 = 64 + (math.abs(h) % 1024).toInt
-        val dim2 = 64 + (math.abs(h >> 10) % 1024).toInt
-        val dim3 = mediaType match {
-          case "image" => 3
-          case "audio" => 1
-          case _       => 24 // fake frame count
-        }
-        (dim1, dim2, dim3, feat)
+    val dim1 = 64 + (math.abs(h) % 1024).toInt
+    val dim2 = 64 + (math.abs(h >> 10) % 1024).toInt
+    val dim3 = mediaType match {
+      case "image" => 3
+      case "audio" => 1
+      case _       => 24 // fake frame count
     }
+    (dim1, dim2, dim3, feat)
   }
 
   /** Batched feature extraction: the Scala-native analogue of a pandas-UDF
-    * `mapInPandas` stage — one partition = one batch, codec state
-    * initialized once per partition, media bytes consumed in the scan
-    * stage so they never shuffle. */
+    * `mapInPandas` stage — one partition = one batch, media bytes consumed
+    * in the scan stage so they never shuffle. */
   def extractFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeature] = {
     import spark.implicits._
     media
       .select(col("media_ref"), col("doc_id"), col("media_type"), col("bytes"))
       .as[(String, String, String, Array[Byte])]
       .mapPartitions { it =>
-        // per-partition init point (real impl: codec/thread-local buffers)
         it.map { case (ref, docId, mType, bytes) =>
           val (d1, d2, d3, feat) = decodeStub(mType, bytes)
           MediaFeature(ref, docId, mType,
@@ -2983,85 +105,6 @@ object MediaJob {
       math.max(1, math.round(srcH * scale).toInt))
   }
 
-  /** REAL bilinear luma resample (edge-clamped, align-corners-false — the
-    * standard convention): output pixel (x, y) samples the source at the
-    * box-center mapping and blends the 4 surrounding texels. Plain-array
-    * math over the already-decoded luminance plane. */
-  private[graft] def bilinearResize(w: Int, h: Int, luma: Array[Float],
-                                    ow: Int, oh: Int): Array[Float] = {
-    val out = new Array[Float](ow * oh)
-    val sx = w.toDouble / ow
-    val sy = h.toDouble / oh
-    var y = 0
-    while (y < oh) {
-      val fy = math.max(0.0, (y + 0.5) * sy - 0.5)
-      val y0 = math.min(h - 1, fy.toInt)
-      val y1 = math.min(h - 1, y0 + 1)
-      val wy = (fy - y0).toFloat
-      var x = 0
-      while (x < ow) {
-        val fx = math.max(0.0, (x + 0.5) * sx - 0.5)
-        val x0 = math.min(w - 1, fx.toInt)
-        val x1 = math.min(w - 1, x0 + 1)
-        val wx = (fx - x0).toFloat
-        val top = luma(y0 * w + x0) * (1 - wx) + luma(y0 * w + x1) * wx
-        val bot = luma(y1 * w + x0) * (1 - wx) + luma(y1 * w + x1) * wx
-        out(y * ow + x) = top * (1 - wy) + bot * wy
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** 2x2 mean-pool of a luminance plane, normalized to [-0.5, 0.5] — the
-    * "thumb" summary the resize rows carry downstream. */
-  private def thumb4(w: Int, h: Int, luma: Array[Float]): Array[Float] = {
-    val sums = new Array[Double](4); val counts = new Array[Long](4)
-    var y = 0
-    while (y < h) {
-      val gy = math.min(1, y * 2 / h)
-      var x = 0
-      while (x < w) {
-        val c = gy * 2 + math.min(1, x * 2 / w)
-        sums(c) += luma(y * w + x); counts(c) += 1
-        x += 1
-      }
-      y += 1
-    }
-    Array.tabulate(4)(k =>
-      if (counts(k) == 0) 0.0f else (sums(k) / counts(k) / 255.0).toFloat - 0.5f)
-  }
-
-  /** Distributed resize with REAL pixel work where the container allows it:
-    * PNG / baseline-JPEG images decode, bilinear-resample into the
-    * aspect-preserving fit box, and carry a thumb pooled from the RESIZED
-    * pixels; undecodable image bytes keep the deterministic fold-feature
-    * fallback behind whatever dims the header probe finds. Bytes are
-    * consumed in the map stage — only geometry + the 4-float thumb flow
-    * downstream. */
-  def resizeImagesDecoded(spark: SparkSession, media: DataFrame,
-                          maxW: Int = 256, maxH: Int = 256): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    media.select(col("media_ref"), col("doc_id"), col("media_type"), col("bytes"))
-      .as[(String, String, String, Array[Byte])]
-      .filter(_._3 == "image")
-      .map { case (ref, docId, _, bytes) =>
-        val b = if (bytes == null) Array.empty[Byte] else bytes
-        decodePngLuma(b).orElse(decodeJpegLuma(b)).orElse(decodeGifLuma(b))
-          .orElse(decodeBmpLuma(b)).orElse(decodeTiffLuma(b)) match {
-          case Some((w, h, _, luma)) =>
-            val (ow, oh) = fitWithin(w, h, maxW, maxH)
-            val rs = bilinearResize(w, h, luma, ow, oh)
-            ResizedMedia(ref, docId, "image", w, h, ow, oh, thumb4(ow, oh, rs))
-          case None => // undecodable → header/fold tier, same as decodeStub
-            val (d1, d2, _, feat) = decodeStub("image", b)
-            val (ow, oh) = fitWithin(math.max(1, d1), math.max(1, d2), maxW, maxH)
-            ResizedMedia(ref, docId, "image", d1, d2, ow, oh, resizeStub(feat))
-        }
-      }
-  }
-
   /** Distributed resize over image features: per-row geometry + stub
     * resample, no shuffle (pure map over the feature table). */
   def resizeImages(spark: SparkSession, features: Dataset[MediaFeature],
@@ -3077,56 +120,16 @@ object MediaJob {
   final case class SampledFrame(
       media_ref: String, doc_id: String, frame_idx: Int, frame_feature: Array[Float])
 
-  /** Frame sampling with REAL pixel decode where the container allows it:
-    * MJPEG-in-AVI videos emit every sampled frame's OWN decoded grid
-    * feature ([[decodeAviMjpeg]]); other video bytes keep the
-    * deterministic rotation fallback over the container-level feature.
-    * Bytes are consumed in the map stage — only the small per-frame
-    * feature rows ever flow downstream (never pixels, never media bytes). */
-  def sampleFramesDecoded(spark: SparkSession, media: DataFrame,
-                          everyNth: Int = 6): Dataset[SampledFrame] = {
-    import spark.implicits._
-    media.select(col("media_ref"), col("doc_id"), col("media_type"), col("bytes"))
-      .as[(String, String, String, Array[Byte])]
-      .filter(r => r._3 == "video" || r._3 == "image")
-      .flatMap { case (ref, docId, mType, bytes) =>
-        // animated GIFs arrive typed "image" but carry a frame sequence —
-        // sample their REAL per-frame grids too; still images emit nothing
-        if (mType == "image") {
-          decodeGif(bytes) match { // decode cap 64 frames, like the MJPEG tier
-            case Some((_, _, n, grids, _)) if n > 1 =>
-              (0 until grids.length by everyNth).map(idx =>
-                SampledFrame(ref, docId, idx, grids(idx)))
-            case _ => Seq.empty
-          }
-        } else decodeAviMjpeg(bytes) match {
-          case Some((_, _, _, frames)) if frames.nonEmpty =>
-            (0 until frames.length by everyNth).map(idx =>
-              SampledFrame(ref, docId, idx, frames(idx)))
-          case _ => // undecodable video → the rotation fallback (stub tier)
-            val (_, _, d3, feat) = decodeStub("video", bytes)
-            // d3 can be a crafted header's declared count (up to 2^31-1):
-            // cap the per-record fan-out so one record can't explode a task
-            (0 until math.min(d3, everyNth * maxSampledFrames) by everyNth)
-              .map { idx =>
-                val rot = Array.tabulate(feat.length)(k =>
-                  feat((k + idx) % feat.length))
-                SampledFrame(ref, docId, idx, rot)
-              }
-        }
-      }
-  }
-
-  /** Frame sampling over video media: every `everyNth` frame of the decoded
-    * frame count becomes one row. The frame fan-out is a per-row sequence
-    * explode (frames never shuffle as pixels — only the per-frame feature
-    * rows flow on); frame decode itself is the same stub seam. */
+  /** Frame sampling over video media: every `everyNth` frame of the
+    * feature's frame count becomes one row. The frame fan-out is a per-row
+    * sequence explode (frames never shuffle as pixels — only the per-frame
+    * feature rows flow on). */
   def sampleFrames(spark: SparkSession, features: Dataset[MediaFeature],
                    everyNth: Int = 6): Dataset[SampledFrame] = {
     import spark.implicits._
     features.filter(_.media_type == "video").flatMap { f =>
-      // dim3 can be a crafted header's declared frame count: bound the
-      // per-record explode (see maxSampledFrames)
+      // dim3 is untrusted per-record metadata: bound the per-record
+      // explode (see maxSampledFrames)
       (0 until math.min(f.dim3, everyNth * maxSampledFrames) by everyNth)
         .map { idx =>
           // STUB frame feature: the media feature rotated by the frame index

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions.col
   *
   * Paragraphs join with `\n`; the five XML named entities and numeric
   * character references decode. Everything is a bounded, total per-row
-  * byte walk (the [[MediaJob]] discipline: malformed input → null,
-  * never a thrown task); container reading is `java.util.zip` streaming
-  * — no XML library, no DOM allocation proportional to nesting.
+  * byte walk (malformed input → null, never a thrown task); container
+  * reading is `java.util.zip` streaming — no XML library, no DOM
+  * allocation proportional to nesting.
   *
   * Reference behavior surface: the reference ingests pre-extracted
   * text/PDF; office formats belong to the web-scale ingest tier the

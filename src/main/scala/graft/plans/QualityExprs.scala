@@ -149,9 +149,10 @@ object QualityExprs {
               k += 1
             }
           } else {
-            // same String.toLowerCase() the builtin lower() delegates to
+            // root-locale lowering: the count must not change with the
+            // JVM default locale (tr-TR would fold "İS" to the stopword "is")
             val lowered = new String(bytes, tokStart, i - tokStart,
-              java.nio.charset.StandardCharsets.UTF_8).toLowerCase
+              java.nio.charset.StandardCharsets.UTF_8).toLowerCase(java.util.Locale.ROOT)
             if (stopSet.contains(lowered)) {
               var k = 0
               while (k < stopBytes.length) {

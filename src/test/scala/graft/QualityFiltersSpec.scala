@@ -136,6 +136,21 @@ class QualityFiltersSpec extends AnyFunSuite {
     }
   }
 
+  test("gopher_signals stopword count does not depend on the default locale") {
+    import java.util.Locale
+    // U+0130 'İ' lower-cases to the stopword "is" under tr-TR but to the
+    // 3-char "i\u0307s" under the root locale
+    val row = org.apache.spark.unsafe.types.UTF8String.fromString("\u0130S")
+    def stopwordsUnder(locale: Locale): Long = {
+      val saved = Locale.getDefault
+      try {
+        Locale.setDefault(locale)
+        graft.plans.QualityExprs.gopherSignals(row).getLong(4)
+      } finally Locale.setDefault(saved)
+    }
+    assert(stopwordsUnder(Locale.forLanguageTag("tr-TR")) == stopwordsUnder(Locale.ROOT))
+  }
+
   test("repetition: a looping 2-gram dominates and fails the bound") {
     val r = repetition("a b a b a b")        // "a b" x3, chars 3*3/11
     assert(r.getString(1) == "a b" && r.getLong(2) == 3)
