@@ -17,7 +17,8 @@ object BenchExtra {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

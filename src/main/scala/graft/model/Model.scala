@@ -49,7 +49,8 @@ final case class CaseRecord(
 
 /** Lineage/metrics row appended per partition at completion (SURVEY.md §7.6):
   * drives both resume (completed partitions are excluded on restart) and the
-  * docs/sec..spans/sec throughput report. */
+  * docs/sec..spans/sec throughput report. `bytes` is the bucket's span text
+  * size in characters (Spark `length`), not bytes. */
 final case class PartitionLineage(
     run_id: String,
     partition_id: Int,

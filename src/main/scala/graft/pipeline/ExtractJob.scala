@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.ExtractAll
@@ -8,13 +8,12 @@ import graft.model.{CaseRecord, Doc, OutSpans, PartitionLineage}
 
 /** The production extraction job (north rule):
   *
-  *  - **Skew**: per-doc span bytes are computed with a higher-order
-  *    `aggregate` (no shuffle); docs above `skewThresholdBytes` are
-  *    round-robined across all partitions (`repartition` with no key) so a
-  *    range partition never owns several giants, while normal docs get
-  *    `repartitionByRange(doc_id)` for balanced, locality-friendly ranges.
-  *    The union keeps both children's partitioning (narrow), so the kernel
-  *    runs over giants-spread + range-balanced partitions.
+  *  - **Skew**: per-doc span size is computed with a higher-order
+  *    `aggregate` (no shuffle). It counts characters (Spark `length`), not
+  *    UTF-8 bytes, as every `*Bytes`/`bytes` size here does. Docs at or
+  *    above `skewThresholdBytes` are scattered across all partitions while
+  *    normal docs hash by `doc_id`, in one shuffle
+  *    ([[partitionForExtraction]]), so no partition owns several giants.
   *    (Reference failure mode: one 500-page PDF stalls a worker —
   *    `src/parallel_processor.py:129-152` has no answer to this.)
   *
@@ -22,19 +21,26 @@ import graft.model.{CaseRecord, Doc, OutSpans, PartitionLineage}
   *    the driver processes buckets in waves, writing records partitioned by
   *    bucket with dynamic partition overwrite (a replayed wave overwrites
   *    only its own buckets → idempotent), then appends one lineage row per
-  *    bucket. On restart, buckets with status='done' lineage are excluded
-  *    via left-anti join — the batch analogue the north rule asks for
+  *    bucket. On restart, buckets with status='done' lineage are skipped
+  *    — the batch analogue the north rule asks for
   *    (the reference reprocesses everything on rerun; its merge tool
   *    `merge_json_files.py` is the manual workaround).
   */
 object ExtractJob {
 
+  /** Giant threshold, in span text characters (see [[withDocBytes]]). */
   val DefaultSkewThresholdBytes: Long = 512 * 1024
 
-  /** Span bytes per doc as a Catalyst expression (no kernel invocation). */
+  /** A doc's span text size in characters (Spark `length`, not UTF-8
+    * bytes), summed over its spans. */
+  private def spanChars: Column =
+    aggregate(col("spans"), lit(0L), (acc, s) => acc + length(s.getField("text")))
+
+  /** Adds `doc_bytes`: the doc's span text size as a Catalyst expression
+    * (no kernel invocation). Despite the name it counts characters, not
+    * bytes. */
   def withDocBytes(docs: DataFrame): DataFrame =
-    docs.withColumn("doc_bytes",
-      aggregate(col("spans"), lit(0L), (acc, s) => acc + length(s.getField("text"))))
+    docs.withColumn("doc_bytes", spanChars)
 
   /** "Identity keys": for each target partition b in [0, n), a long k_b
     * whose Murmur3 hash (seed 42 — what Spark's HashPartitioning applies to
@@ -65,7 +71,7 @@ object ExtractJob {
     *
     *  - normal docs bucket by `xxhash64(doc_id) mod n` (uniform, stable,
     *    cluster-size-independent);
-    *  - giants (span bytes ≥ threshold) bucket by
+    *  - giants (span characters ≥ `skewThresholdBytes`) bucket by
     *    `monotonically_increasing_id() mod n` — scattered across all
     *    partitions regardless of how their doc_ids cluster;
     *  - buckets map through [[identityKeys]] so the hash shuffle places
@@ -135,10 +141,22 @@ object ExtractJob {
     val remaining = (0 until numBuckets).filterNot(doneBuckets)
 
     for (wave <- remaining.grouped(bucketsPerWave)) {
-      val waveDf = bucketed.filter($"bucket".isin(wave: _*)).cache()
       val started = System.currentTimeMillis()
 
-      val waveRecords = waveDf
+      // Per-bucket stats for lineage (docs/spans/chars + id range), observed
+      // on the wave's input as its records are written: no second job and
+      // no cached wave.
+      val stats = Observation()
+      val perBucket = wave.flatMap { b =>
+        def of(c: Column): Column = when($"bucket" === b, c)
+        Seq(count(of(lit(1))).as(s"docs_$b"),
+          sum(of(size($"spans"))).as(s"spans_$b"),
+          sum(of(spanChars)).as(s"bytes_$b"),
+          min(of($"doc_id")).as(s"doc_id_min_$b"),
+          max(of($"doc_id")).as(s"doc_id_max_$b"))
+      }
+      val waveRecords = bucketed.filter($"bucket".isin(wave: _*))
+        .observe(stats, perBucket.head, perBucket.tail: _*)
         .select($"doc_id", $"spans", $"bucket").as[(String, Seq[graft.model.Span], Int)]
         .mapPartitions { it =>
           it.flatMap { case (id, spans, bucket) =>
@@ -153,30 +171,23 @@ object ExtractJob {
       waveRecords.write.mode(SaveMode.Overwrite)
         .partitionBy("bucket").parquet(recordsPath)
 
-      // Per-bucket stats for lineage (docs/spans/bytes + id range).
-      val stats = waveDf.groupBy($"bucket").agg(
-        count(lit(1)).as("docs"),
-        sum(size($"spans")).as("spans"),
-        sum(aggregate($"spans", lit(0L), (acc, s) => acc + length(s.getField("text")))).as("bytes"),
-        min($"doc_id").as("doc_id_min"),
-        max($"doc_id").as("doc_id_max")
-      ).collect()
-
+      // An empty bucket counts 0 docs; its sums and ids come back null.
+      val m = stats.get
+      def stat[A](name: String, b: Int, empty: A): A =
+        Option(m(s"${name}_$b")).fold(empty)(_.asInstanceOf[A])
       val finished = System.currentTimeMillis()
       val rows = wave.map { b =>
-        val st = stats.find(_.getInt(0) == b)
         PartitionLineage(
           run_id = runId, partition_id = b,
-          doc_id_min = st.map(_.getString(4)).getOrElse(""),
-          doc_id_max = st.map(_.getString(5)).getOrElse(""),
-          docs = st.map(_.getLong(1)).getOrElse(0L),
-          spans = st.map(_.getLong(2)).getOrElse(0L),
-          bytes = st.map(_.getLong(3)).getOrElse(0L),
+          doc_id_min = stat("doc_id_min", b, ""),
+          doc_id_max = stat("doc_id_max", b, ""),
+          docs = stat("docs", b, 0L),
+          spans = stat("spans", b, 0L),
+          bytes = stat("bytes", b, 0L),
           status = "done", started_at = started, finished_at = finished)
       }
       rows.toDS().write.mode(SaveMode.Append).parquet(lineagePath)
       appended ++= rows
-      waveDf.unpersist()
     }
     appended.result()
   }

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.Locale
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,15 +60,31 @@ object KgJob {
     (lawyers.toSeq, firms.toSeq)
   }
 
+  /** The lawyer segment of one record, parsed once: its lawyers and firms
+    * ([[parseLawyerSegment]]) and whether it mentions each party role (the
+    * reference's coarse 'plaintiff'/'defendant' substring check,
+    * `data_importer.py:306-322`). Not private: Spark's generated code
+    * refers to the class by name. */
+  final case class LawyerSegment(lawyers: Seq[String], firms: Seq[String],
+                                 forPlaintiff: Boolean, forDefendant: Boolean)
+
   private val parsePartiesUdf = udf(parseMultipleParties _)
-  private val parseLawyersUdf = udf((s: String) => parseLawyerSegment(s)._1)
-  private val parseFirmsUdf = udf((s: String) => parseLawyerSegment(s)._2)
+
+  // Case folds run on the JVM string with Locale.ROOT. Spark's `lower`
+  // gives the same answers, but its first non-ASCII value starts ICU case
+  // mapping, which costs seconds of a cold pass.
+  private val lawyerSegmentUdf = udf { (s: String) =>
+    val (lawyers, firms) = parseLawyerSegment(s)
+    val lc = if (s == null) "" else s.toLowerCase(Locale.ROOT)
+    LawyerSegment(lawyers, firms, lc.contains("plaintiff"), lc.contains("defendant"))
+  }
+  private val isUnknownUdf = udf((s: String) => s.toLowerCase(Locale.ROOT) == "unknown")
 
   /** `clean_field` (`data_importer.py:120-123`): blank / whitespace-only /
     * 'unknown' (case-insensitive) → "", else trimmed. */
   private def cleanField(c: Column): Column = {
     val raw = coalesce(c.cast("string"), lit(""))
-    when(trim(raw) === "" || lower(raw) === "unknown", lit("")).otherwise(trim(raw))
+    when(trim(raw) === "" || isUnknownUdf(raw), lit("")).otherwise(trim(raw))
   }
 
   /** Column access tolerant of narrower record schemas (tests and partial
@@ -85,7 +103,7 @@ object KgJob {
       "judgment_result", "claim_amount", "judgment_amount", "language",
       "document_type")
     val stable = concat(lit("case_"),
-      substring(md5(concat_ws("", fields.map(f => cleanField(fieldOr(records, f))): _*)), 1, 11))
+      substring(md5(concat_ws("\u0001", fields.map(f => cleanField(fieldOr(records, f))): _*)), 1, 11))
     val cn = cleanField(fieldOr(records, "case_number"))
     val fn = cleanField(fieldOr(records, "file_name"))
     when(cn =!= "", cn).when(fn =!= "", fn).otherwise(stable)
@@ -110,7 +128,8 @@ object KgJob {
   private def cnLookup(m: Map[String, String], c: Column): Column =
     coalesce(element_at(typedlit(m), coalesce(c.cast("string"), lit(""))), lit(""))
 
-  /** Records → exploded per-case entity view (cached intermediate). */
+  /** Records → one row per case: its id, cleaned file name, court and
+    * judge, the parsed party / lawyer / firm lists and the Case props. */
   private def entityView(records: DataFrame): DataFrame =
     records.select(
       caseKey(records).as("case_key"),
@@ -119,9 +138,7 @@ object KgJob {
       cleanField(col("judge")).as("judge"),
       parsePartiesUdf(col("plaintiff")).as("plaintiffs"),
       parsePartiesUdf(col("defendant")).as("defendants"),
-      parseLawyersUdf(col("lawyer")).as("lawyers"),
-      parseFirmsUdf(col("lawyer")).as("firms"),
-      lower(coalesce(col("lawyer"), lit(""))).as("lawyer_segment_lc"),
+      lawyerSegmentUdf(col("lawyer")).as("segment"),
       caseProps(records).as("case_props"))
 
   /** Case-node property map (`data_importer.py:135-155`): every extraction
@@ -156,105 +173,65 @@ object KgJob {
     * carry; the winner here is chosen by CANONICAL lexicographic
     * `file_name` order — deterministic across runs/executors, but when the
     * same (type, name) appears in multiple files the surviving props can
-    * differ from a reference run. */
+    * differ from a reference run.
+    *
+    * One scan: each case row becomes an array of its node structs, inlined
+    * and then deduped by one aggregation. */
   def nodes(records: DataFrame): DataFrame = {
-    val ev = entityView(records)
-    val cases = ev.select(lit("Case").as("type"), col("case_key").as("name"),
-      col("case_props").as("props"), col("file_name"))
-    def roleProps(role: String): Column =
-      map(lit("name"), col("name"), lit("role"), lit(role))
-    def typeProps(t: String): Column =
-      map(lit("name"), col("name"), lit("type"), lit(t))
-    val courts = ev.filter(col("court_name") =!= "")
-      .select(lit("Court").as("type"), col("court_name").as("name"), col("file_name"))
-      .withColumn("props", typeProps("court"))
-    val judges = ev.filter(col("judge") =!= "")
-      .select(lit("Judge").as("type"), col("judge").as("name"), col("file_name"))
-      .withColumn("props", roleProps("judge"))
-    val plaintiffs = ev.select(explode(col("plaintiffs")).as("name"), col("file_name"))
-      .select(lit("Plaintiff").as("type"), col("name"), col("file_name"))
-      .withColumn("props", roleProps("plaintiff"))
-    val defendants = ev.select(explode(col("defendants")).as("name"), col("file_name"))
-      .select(lit("Defendant").as("type"), col("name"), col("file_name"))
-      .withColumn("props", roleProps("defendant"))
-    val lawyers = ev.select(explode(col("lawyers")).as("name"), col("file_name"))
-      .select(lit("Lawyer").as("type"), col("name"), col("file_name"))
-      .withColumn("props", roleProps("lawyer"))
-    val firms = ev.select(explode(col("firms")).as("name"), col("file_name"))
-      .select(lit("LawFirm").as("type"), col("name"), col("file_name"))
-      .withColumn("props", typeProps("law_firm"))
-
-    val all = cases.select("type", "name", "props", "file_name")
-      .unionByName(courts.select("type", "name", "props", "file_name"))
-      .unionByName(judges.select("type", "name", "props", "file_name"))
-      .unionByName(plaintiffs.select("type", "name", "props", "file_name"))
-      .unionByName(defendants.select("type", "name", "props", "file_name"))
-      .unionByName(lawyers.select("type", "name", "props", "file_name"))
-      .unionByName(firms.select("type", "name", "props", "file_name"))
+    def node(t: String, name: Column, props: Column): Column =
+      struct(lit(t).as("type"), name.as("name"), props.as("props"))
+    def roleNode(t: String, role: String): Column => Column =
+      name => node(t, name, map(lit("name"), name, lit("role"), lit(role)))
+    def typeNode(t: String, kind: String): Column => Column =
+      name => node(t, name, map(lit("name"), name, lit("type"), lit(kind)))
+    val perCase = concat(
+      array(node("Case", col("case_key"), col("case_props"))),
+      filter(array(typeNode("Court", "court")(col("court_name")),
+        roleNode("Judge", "judge")(col("judge"))), n => n("name") =!= ""),
+      transform(col("plaintiffs"), roleNode("Plaintiff", "plaintiff")),
+      transform(col("defendants"), roleNode("Defendant", "defendant")),
+      transform(col("segment.lawyers"), roleNode("Lawyer", "lawyer")),
+      transform(col("segment.firms"), typeNode("LawFirm", "law_firm")))
     // dedupe on (type, name); canonical lexicographic file_name tiebreak
     // (NOT reference insertion order — see the scaladoc deviation note)
-    val w = Window.partitionBy(col("type"), col("name"))
-      .orderBy(col("file_name"))
-    all.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("type"), col("name"), col("props"))
+    entityView(records)
+      .select(col("file_name"), inline(perCase))
+      .groupBy(col("type"), col("name"))
+      .agg(min_by(col("props"), col("file_name")).as("props"))
   }
 
   /** Edges: HEARD_IN, JUDGED_BY, INVOLVES_PLAINTIFF, INVOLVES_DEFENDANT,
-    * and the per-case plaintiff×defendant SUES cross product
-    * (`data_importer.py:252-295`) — an equi-join on case_key carrying a
-    * local cross product, expressed as explode × explode. */
+    * the per-case plaintiff×defendant SUES cross product
+    * (`data_importer.py:252-295`), REPRESENTED_BY and WORKS_FOR. Every
+    * edge stays within one case, so each case row becomes an array of its
+    * edge structs (the cross products as nested `transform`s) and one
+    * `inline` emits them: one scan, no join, no shuffle. */
   def edges(records: DataFrame): DataFrame = {
-    val ev = entityView(records).cache()
-    val heardIn = ev.filter(col("court_name") =!= "").select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("HEARD_IN").as("rel_type"),
-      lit("Court").as("dst_type"), col("court_name").as("dst_name"))
-    val judgedBy = ev.filter(col("judge") =!= "").select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("JUDGED_BY").as("rel_type"),
-      lit("Judge").as("dst_type"), col("judge").as("dst_name"))
-    val invP = ev.select(col("case_key"), explode(col("plaintiffs")).as("p")).select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("INVOLVES_PLAINTIFF").as("rel_type"),
-      lit("Plaintiff").as("dst_type"), col("p").as("dst_name"))
-    val invD = ev.select(col("case_key"), explode(col("defendants")).as("d")).select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("INVOLVES_DEFENDANT").as("rel_type"),
-      lit("Defendant").as("dst_type"), col("d").as("dst_name"))
-    // SUES: per-case local cross product — both explodes stay on the same
-    // row (no join/shuffle needed at all).
-    val sues = ev
-      .select(col("case_key"), explode(col("plaintiffs")).as("p"), col("defendants"))
-      .select(col("p"), explode(col("defendants")).as("d"))
-      .select(
-        lit("Plaintiff").as("src_type"), col("p").as("src_name"),
-        lit("SUES").as("rel_type"),
-        lit("Defendant").as("dst_type"), col("d").as("dst_name"))
+    def edge(srcType: String, rel: String, dstType: String)(src: Column, dst: Column): Column =
+      struct(lit(srcType).as("src_type"), src.as("src_name"), lit(rel).as("rel_type"),
+        lit(dstType).as("dst_type"), dst.as("dst_name"))
+    def fromCase(rel: String, dstType: String): Column => Column =
+      dst => edge("Case", rel, dstType)(col("case_key"), dst)
+    def cross(srcs: Column, dsts: Column)(e: (Column, Column) => Column): Column =
+      flatten(transform(srcs, s => transform(dsts, d => e(s, d))))
+    val lawyers = col("segment.lawyers")
     // REPRESENTED_BY (`data_importer.py:306-322`): lawyer → party, gated on
-    // the lawyer segment mentioning the party's role (the reference's
-    // coarse 'plaintiff'/'defendant' substring check).
-    def representedBy(roleWord: String, partiesCol: String, dstType: String): DataFrame =
-      ev.filter(col("lawyer_segment_lc").contains(roleWord))
-        .select(explode(col("lawyers")).as("l"), col(partiesCol))
-        .select(col("l"), explode(col(partiesCol)).as("p"))
-        .select(
-          lit("Lawyer").as("src_type"), col("l").as("src_name"),
-          lit("REPRESENTED_BY").as("rel_type"),
-          lit(dstType).as("dst_type"), col("p").as("dst_name"))
-    val repP = representedBy("plaintiff", "plaintiffs", "Plaintiff")
-    val repD = representedBy("defendant", "defendants", "Defendant")
-    // WORKS_FOR (`data_importer.py:324-329`): lawyer → firm, per case.
-    val worksFor = ev
-      .select(explode(col("lawyers")).as("l"), col("firms"))
-      .select(col("l"), explode(col("firms")).as("f"))
-      .select(
-        lit("Lawyer").as("src_type"), col("l").as("src_name"),
-        lit("WORKS_FOR").as("rel_type"),
-        lit("LawFirm").as("dst_type"), col("f").as("dst_name"))
-    heardIn.unionByName(judgedBy).unionByName(invP).unionByName(invD)
-      .unionByName(sues).unionByName(repP).unionByName(repD)
-      .unionByName(worksFor)
+    // the lawyer segment mentioning the party's role.
+    def representing(mentions: String): Column =
+      filter(lawyers, _ => col(s"segment.$mentions"))
+    val perCase = concat(
+      filter(array(fromCase("HEARD_IN", "Court")(col("court_name")),
+        fromCase("JUDGED_BY", "Judge")(col("judge"))), e => e("dst_name") =!= ""),
+      transform(col("plaintiffs"), fromCase("INVOLVES_PLAINTIFF", "Plaintiff")),
+      transform(col("defendants"), fromCase("INVOLVES_DEFENDANT", "Defendant")),
+      cross(col("plaintiffs"), col("defendants"))(edge("Plaintiff", "SUES", "Defendant")),
+      cross(representing("forPlaintiff"), col("plaintiffs"))(
+        edge("Lawyer", "REPRESENTED_BY", "Plaintiff")),
+      cross(representing("forDefendant"), col("defendants"))(
+        edge("Lawyer", "REPRESENTED_BY", "Defendant")),
+      // WORKS_FOR (`data_importer.py:324-329`): lawyer → firm, per case.
+      cross(lawyers, col("segment.firms"))(edge("Lawyer", "WORKS_FOR", "LawFirm")))
+    entityView(records).select(inline(perCase))
   }
 
   /** `query_nodes` (`graph_database.py:139-168`): optional label filter +

@@ -16,17 +16,18 @@ object PipelineMain {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val runId = if (args.length > 2) args(2) else "run1"
 
+    val cpus = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master("local[8]")
+      .master(s"local[$cpus]")
       .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
-    val docs = CorpusGen.generate(spark, nDocs, 8)
+    val docs = CorpusGen.generate(spark, nDocs, cpus)
     val lineage = ExtractJob.runResumable(spark, docs, outDir, runId,
       numBuckets = 16, bucketsPerWave = 8)
     val dt = (System.nanoTime() - t0) / 1e9
